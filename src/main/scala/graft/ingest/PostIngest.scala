@@ -62,33 +62,34 @@ object PostIngest {
     StructField("swipe_ups", LongType),
     StructField("_corrupt_record", StringType)))
 
-  /** S1: PERMISSIVE JSON scan of the post lake. The FULL ingest envelope
-    * the reference wraps each document with — objectKey, createdDate,
-    * content_type, content_length (s3-to-es_aws.py:163-168) — is derived
-    * from real file metadata: content_length is the actual object size
-    * (`_metadata.file_size`), content_type from the object key suffix. */
-  def readPosts(spark: SparkSession, path: String): DataFrame = {
-    spark.read
-      .schema(postSchema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-      .withColumn("objectKey", decodedObjectKey) // F5
+  /** S1: PERMISSIVE JSON scan of the post lake. */
+  def readPosts(spark: SparkSession, path: String): DataFrame =
+    withEnvelope(spark.read.schema(postSchema).options(permissive).json(path))
+
+  private val permissive = Map(
+    "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")
+
+  /** The FULL ingest envelope the reference wraps each document with —
+    * objectKey, createdDate, content_type, content_length
+    * (s3-to-es_aws.py:163-168) — derived from real file metadata:
+    * content_length is the actual object size (`_metadata.file_size`),
+    * content_type from the object key suffix. Shared by the batch and
+    * streaming readers so their envelopes can never diverge.
+    *
+    * F5: the Lambda URL-decodes the S3 event key (unquote_plus,
+    * s3-to-es_aws.py:148-149). `input_file_name()` is PERCENT-encoded (a
+    * literal '+' stays '+'), so '+' is protected before the form-decoding
+    * url_decode — otherwise a file named a+b.json would corrupt to
+    * "a b.json". */
+  private def withEnvelope(posts: DataFrame): DataFrame =
+    posts
+      .withColumn("objectKey",
+        url_decode(replace(input_file_name(), lit("+"), lit("%2B"))))
       .withColumn("createdDate", col("timestamp")) // replay: arrival == post time
       .withColumn("content_length", col("_metadata.file_size"))
       .withColumn("content_type",
         when(col("objectKey").endsWith(".json"), lit("application/json"))
           .otherwise(lit("application/octet-stream")))
-  }
-
-  /** F5: the Lambda URL-decodes the S3 event key (unquote_plus,
-    * s3-to-es_aws.py:148-149). `input_file_name()` is PERCENT-encoded (a
-    * literal '+' stays '+'), so '+' is protected before the form-decoding
-    * url_decode — otherwise a file named a+b.json would corrupt to
-    * "a b.json". Shared by the batch and streaming readers so their
-    * objectKey values can never diverge. */
-  private def decodedObjectKey =
-    url_decode(replace(input_file_name(), lit("+"), lit("%2B")))
 
   private val extPattern = "\\.(\\w{3,4})\\?" // F1: reference regex uses a
   // lookahead `\.\w{3,4}(?=\?)` (s3-to-es_aws.py:92); Spark's RE2-style
@@ -132,45 +133,28 @@ object PostIngest {
 
   /** Streaming form of the ingest — SURVEY §3.1's engine equivalent of
     * the per-PUT Lambda: `readStream.json(lake)` → the same flatten chain
-    * → foreachBatch keyed merge (versioned parquet state, latest-wins).
-    * `Trigger.AvailableNow` replay of the static lake equals `snapshot`;
-    * `maxFilesPerTrigger` bounds each micro-batch so the merge is
-    * exercised across batches. */
+    * → a keyed merge per micro-batch (`StreamFold.run`; versioned parquet
+    * snapshot, latest-wins). `Trigger.AvailableNow` replay of the static
+    * lake equals `snapshot`; `maxFilesPerTrigger` bounds each micro-batch
+    * so the merge is exercised across batches. */
   def streamSnapshot(spark: SparkSession, globPath: String,
                      maxFilesPerTrigger: Int = 3): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = java.nio.file.Files.createTempDirectory("graft_posts").toString
-    graft.streaming.Replay.cleanupAtExit(work)
+    import graft.streaming.StreamFold
+    val work = StreamFold.work(None, "graft_posts")
     @volatile var latest: Option[String] = None
-    val stream = spark.readStream
-      .schema(postSchema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .json(globPath)
-      .withColumn("objectKey", decodedObjectKey) // F5, identical to batch
-      .withColumn("createdDate", col("timestamp"))
-      .withColumn("content_length", col("_metadata.file_size"))
-      .withColumn("content_type",
-        when(col("objectKey").endsWith(".json"), lit("application/json"))
-          .otherwise(lit("application/octet-stream")))
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        val incoming = flatten(batch)
-        val merged = latest match {
-          case Some(prev) => ss.read.parquet(prev).unionByName(incoming)
-          case None       => incoming
-        }
-        val next = s"$work/state_v$batchId"
-        latestPerPost(merged).write.mode("overwrite").parquet(next)
-        latest = Some(next)
-        ()
+    StreamFold.run(withEnvelope(spark.readStream.schema(postSchema)
+        .options(permissive)
+        .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+        .json(globPath)), work) { (batch, batchId) =>
+      val incoming = flatten(batch)
+      val merged = latest match {
+        case Some(prev) => batch.sparkSession.read.parquet(prev).unionByName(incoming)
+        case None       => incoming
       }
-      .start()
-    q.awaitTermination()
+      val next = s"$work/state_v$batchId"
+      latestPerPost(merged).write.mode("overwrite").parquet(next)
+      latest = Some(next)
+    }
     latest match {
       case Some(path) => spark.read.parquet(path)
       case None       => spark.emptyDataFrame

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.StructType
   *     the generation was compacted away fails loudly, never silently
   *     double-counts);
   *   - writes are keyed by the micro-batch id and `overwrite` their own
-  *     `b<batchId>` subdir, so a batch REPLAYED after a crash (foreachBatch
-  *     is at-least-once: the failure can land between the state append and
+  *     `b<batchId>` subdir, so a batch REPLAYED after a crash (the batch
+  *     sink is at-least-once: the failure can land between the state append and
   *     the checkpoint commit) lands on exactly the same rows instead of
   *     appending twice. For that to hold, the replayed computation must see
   *     the SAME state the original attempt saw — so per-batch reads pass
@@ -47,8 +47,11 @@ import org.apache.spark.sql.types.StructType
   *     this is what lets a restarted stream reload its dedup state and its
   *     streaming checkpoint together (they live side by side under the
   *     same dir);
-  *   - single-stream use only: foreachBatch runs sequentially within a
-  *     stream; concurrent streams need one instance each.
+  *   - single-stream use only: micro-batches run sequentially within a
+  *     stream; concurrent streams need one instance each;
+  *   - a batch's writes all finish before its commit returns or throws:
+  *     a failed append never leaves a sibling still writing into
+  *     `b<batchId>`, where it could race the replayed batch's overwrite.
   *
   * All listing/walking/deleting goes through the Hadoop `FileSystem`
   * resolved from the `work` path (the active session's Hadoop conf when
@@ -57,7 +60,7 @@ import org.apache.spark.sql.types.StructType
   * filesystem. The specs exercise both plain paths and explicit
   * `file://` URIs through the same instance.
   */
-private[streaming] final class AppendOnlyState(work: String,
+private[streaming] final class AppendOnlyState(val work: String,
     tables: Seq[(String, StructType)], compactEvery: Int,
     folds: Map[String, DataFrame => DataFrame] = Map.empty) {
   private val schemas = tables.toMap
@@ -203,7 +206,11 @@ private[streaming] final class AppendOnlyState(work: String,
       ss.sparkContext.setJobDescription(label)
       try work() finally ss.sparkContext.setJobDescription(null)
     }}
-    Await.result(Future.sequence(appendWrites ++ sideWrites), Duration.Inf)
+    // wait for EVERY write before surfacing a failure (`Future.sequence`
+    // fails fast), then rethrow the first failure itself
+    val writes = appendWrites ++ sideWrites
+    writes.foreach(Await.ready(_, Duration.Inf))
+    writes.foreach(_.value.get.get)
     hasData = true
     if (!replay) batchesInGen += 1
     if (batchesInGen >= compactEvery) {

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.Tables
 import graft.similarity.Ann
+import graft.streaming.StreamFold.Delta
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming PQ ingestion — the arrival-time form of qe8_pq_topk
@@ -28,21 +26,19 @@ import org.apache.spark.sql.types._
   * stream. Encoding is embarrassingly per-row, so per-batch cost is
   * O(batch); the per-vector state row is m small ints — the
   * memory-bandwidth compression that makes the 100 TB ADC scan viable
-  * is exactly what makes the state append tiny here.
-  *
-  * Restart contract shared with the sibling streams: the codes index
-  * and the streaming checkpoint live side by side under `workDir` and
-  * reload together; a batch replayed from the at-least-once window
-  * re-encodes the same vectors (pure function of the frozen codebook)
-  * and overwrites its own batch-keyed subdir — a double append would
-  * duplicate (vec_id, codes) rows and corrupt every ADC ranking the
-  * duplicated vector appears in, which the shared qe8 oracle would
-  * catch. */
+  * is exactly what makes the state append tiny here. A replayed batch
+  * re-encodes the same vectors (pure function of the frozen codebook);
+  * a double append would duplicate (vec_id, codes) rows and corrupt every
+  * ADC ranking the duplicated vector appears in, which the shared qe8
+  * oracle would catch. */
 object PqStream {
 
   private val embStreamSchema = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType))))
+  private val codesSchema = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("codes", ArrayType(IntegerType))))
 
   def streamPqTopk(spark: SparkSession, stagedDir: String, cb: DataFrame,
                    m: Int, subDim: Int, k: Int = 5,
@@ -51,34 +47,12 @@ object PqStream {
                    maxFilesPerTrigger: Int = 1,
                    compactEvery: Int = 16,
                    workDir: Option[String] = None): DataFrame = {
-    val work = workDir match {
-      case Some(w) =>
-        Files.createDirectories(java.nio.file.Paths.get(w)); w
-      case None =>
-        val t = Files.createTempDirectory("graft_spq").toString
-        Replay.cleanupAtExit(t); t
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_spq"),
+      Seq(("codes", codesSchema)), compactEvery)
+    StreamFold.fold(StreamFold.parquet(spark, embStreamSchema, stagedDir,
+        maxFilesPerTrigger), state) { (batch, _) =>
+      Delta("codes" -> Ann.pqCodes(batch, cb, m, subDim))
     }
-    val codesSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("codes", ArrayType(IntegerType))))
-    val state = new AppendOnlyState(work, Seq(("codes", codesSchema)),
-      compactEvery)
-    val q = spark.readStream.schema(embStreamSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "codes" -> Ann.pqCodes(batch, cb, m, subDim))
-        }
-        Replay.maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
     val lake = spark.read.schema(embStreamSchema).parquet(stagedDir)
     Ann.adcTopk(Ann.querySample(lake, pred, maxQ), cb,
       state.read(spark, "codes"), k, m, subDim)
@@ -121,38 +95,21 @@ object PqStream {
                       workDir: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.operators.VectorOps.cosine
-    val work = workDir match {
-      case Some(w) =>
-        Files.createDirectories(java.nio.file.Paths.get(w)); w
-      case None =>
-        val t = Files.createTempDirectory("graft_sivfpq").toString
-        Replay.cleanupAtExit(t)
-        t
-    }
+    val work = StreamFold.work(workDir, "graft_sivfpq")
     val idx = s"$work/codes"
-    val q = spark.readStream.schema(embStreamSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cells = Ann.assignments(
-            batch.withColumn("label", lit(0)), cents)
-          .select(col("vec_id"), col("cell").cast("int").as("cell"))
-        Ann.pqCodes(batch, cb, m, subDim)
-          .join(cells, "vec_id")
-          .withColumn("b", lit(batchId))
-          .repartition(col("cell")) // one file per (batch, cell)
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("b", "cell")
-          .parquet(idx)
-        Replay.maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    StreamFold.run(StreamFold.parquet(spark, embStreamSchema, stagedDir,
+        maxFilesPerTrigger), work) { (batch, batchId) =>
+      val cells = Ann.assignments(batch.withColumn("label", lit(0)), cents)
+        .select(col("vec_id"), col("cell").cast("int").as("cell"))
+      Ann.pqCodes(batch, cb, m, subDim)
+        .join(cells, "vec_id")
+        .withColumn("b", lit(batchId))
+        .repartition(col("cell")) // one file per (batch, cell)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("b", "cell")
+        .parquet(idx)
+    }
     val lake = spark.read.schema(embStreamSchema).parquet(stagedDir)
     val sample = Ann.querySample(lake, pred, maxQ)
     val queries = sample
@@ -224,34 +181,12 @@ object PqStream {
                    maxFilesPerTrigger: Int = 1,
                    compactEvery: Int = 16,
                    workDir: Option[String] = None): DataFrame = {
-    val work = workDir match {
-      case Some(w) =>
-        Files.createDirectories(java.nio.file.Paths.get(w)); w
-      case None =>
-        val t = Files.createTempDirectory("graft_ssq").toString
-        Replay.cleanupAtExit(t); t
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_ssq"),
+      Seq(("codes", codesSchema)), compactEvery)
+    StreamFold.fold(StreamFold.parquet(spark, embStreamSchema, stagedDir,
+        maxFilesPerTrigger), state) { (batch, _) =>
+      Delta("codes" -> Ann.sqCodesWith(batch, mn, mx))
     }
-    val codesSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("codes", ArrayType(IntegerType))))
-    val state = new AppendOnlyState(work, Seq(("codes", codesSchema)),
-      compactEvery)
-    val q = spark.readStream.schema(embStreamSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "codes" -> Ann.sqCodesWith(batch, mn, mx))
-        }
-        Replay.maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
     val lake = spark.read.schema(embStreamSchema).parquet(stagedDir)
     Ann.sqRank(state.read(spark, "codes"), weights,
       Ann.querySample(lake, pred, maxQ).select(col("vec_id")), k)
@@ -272,15 +207,12 @@ object PqStream {
     * batch boundary. */
   private def stagedPqLake(spark: SparkSession, dir: String,
                            emb: DataFrame): String =
-    Replay.stagedLakes.computeIfAbsent(
-      "pq|" + Tables.contentKey(s"$dir/embeddings.parquet"), _ => {
-        val t = Files.createTempDirectory("graft_pq_lake").toString
-        Replay.cleanupAtExit(t)
-        emb.select(col("vec_id"), col("embedding"))
-          .repartitionByRange(2, col("vec_id"))
-          .write.mode("overwrite").parquet(t)
-        t
-      })
+    StreamFold.stage("pq|" + Tables.contentKey(s"$dir/embeddings.parquet"),
+        "graft_pq_lake") { t =>
+      emb.select(col("vec_id"), col("embedding"))
+        .repartitionByRange(2, col("vec_id"))
+        .write.mode("overwrite").parquet(t)
+    }
 
   /** Streaming MMR-diversified retrieval — qe15's arrival-time form
     * and the last retrieval-family member without a streaming twin
@@ -295,13 +227,7 @@ object PqStream {
     * the fully-arrived lake is byte-identical to qe15 over the same
     * vectors and SHARES ITS ORACLE SQL VERBATIM across the two-file
     * batch boundary: a query's candidate set and every greedy step can
-    * mix vectors that arrived in different batches.
-    *
-    * Restart contract as the codes-index siblings: batch-keyed
-    * overwrites + `alreadyFolded` skip (a double-appended batch would
-    * duplicate vectors, corrupting the pair frame's cand_a ≠ cand_b
-    * shape and every affected trace — which the shared oracle catches);
-    * kill-tested in RestartSpec. */
+    * mix vectors that arrived in different batches. */
   def streamMmr(spark: SparkSession, stagedDir: String,
                 k: Int = Ann.DefaultTopK,
                 c: Int = Ann.DefaultMmrCandidates,
@@ -310,31 +236,12 @@ object PqStream {
                 maxFilesPerTrigger: Int = 1,
                 compactEvery: Int = 16,
                 workDir: Option[String] = None): DataFrame = {
-    val work = workDir match {
-      case Some(w) =>
-        Files.createDirectories(java.nio.file.Paths.get(w)); w
-      case None =>
-        val t = Files.createTempDirectory("graft_smmr").toString
-        Replay.cleanupAtExit(t); t
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_smmr"),
+      Seq(("vx", embStreamSchema)), compactEvery)
+    StreamFold.fold(StreamFold.parquet(spark, embStreamSchema, stagedDir,
+        maxFilesPerTrigger), state) { (batch, _) =>
+      Delta("vx" -> batch.select(col("vec_id"), col("embedding")))
     }
-    val state = new AppendOnlyState(work, Seq(("vx", embStreamSchema)),
-      compactEvery)
-    val q = spark.readStream.schema(embStreamSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "vx" -> batch.select(col("vec_id"), col("embedding")))
-        }
-        Replay.maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
     Ann.mmrTopkFrom(state.read(spark, "vx"), k, c, lambdaPct, maxQ)
   }
 
@@ -353,15 +260,12 @@ object PqStream {
     * row), memoized like the qs18/qs20 lake. */
   private def stagedPcaLake(spark: SparkSession, dir: String,
                             emb: DataFrame): String =
-    Replay.stagedLakes.computeIfAbsent(
-      "pca|" + Tables.contentKey(s"$dir/embeddings.parquet"), _ => {
-        val t = Files.createTempDirectory("graft_pca_lake").toString
-        Replay.cleanupAtExit(t)
-        emb.select(col("vec_id"), col("embedding"), col("label"))
-          .repartitionByRange(2, col("vec_id"))
-          .write.mode("overwrite").parquet(t)
-        t
-      })
+    StreamFold.stage("pca|" + Tables.contentKey(s"$dir/embeddings.parquet"),
+        "graft_pca_lake") { t =>
+      emb.select(col("vec_id"), col("embedding"), col("label"))
+        .repartitionByRange(2, col("vec_id"))
+        .write.mode("overwrite").parquet(t)
+    }
 
   /** Streaming PCA — qe18's arrival-time form, and the cleanest
     * streaming-sufficient-statistics story in the engine: the integer
@@ -375,8 +279,8 @@ object PqStream {
     * returning byte-identical rows to qe18 over the same vectors — so
     * qe18's oracle SQL is shared verbatim. A double-applied batch
     * doubles ITS contribution relative to the others, bending the
-    * dominant direction — which the shared oracle and the RestartSpec
-    * kill-test both catch. */
+    * dominant direction — which the shared oracle and the restart spec
+    * both catch. */
   def streamPca(spark: SparkSession, stagedDir: String,
                 dim: Int = graft.similarity.Pca.Dim,
                 iters: Int = graft.similarity.Pca.Iters,
@@ -384,42 +288,24 @@ object PqStream {
                 compactEvery: Int = 16,
                 workDir: Option[String] = None): DataFrame = {
     import graft.similarity.Pca
-    val work = workDir match {
-      case Some(w) =>
-        Files.createDirectories(java.nio.file.Paths.get(w)); w
-      case None =>
-        val t = Files.createTempDirectory("graft_spca").toString
-        Replay.cleanupAtExit(t); t
-    }
     val smSchema = StructType(Seq(
       StructField("i", IntegerType),
       StructField("j", IntegerType),
       StructField("c", LongType)))
-    val state = new AppendOnlyState(work, Seq(("sm", smSchema)), compactEvery,
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_spca"),
+      Seq(("sm", smSchema)), compactEvery,
       folds = Map("sm" -> ((df: DataFrame) =>
         df.groupBy("i", "j").agg(sum("c").as("c")))))
-    val q = spark.readStream.schema(pcaStreamSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val acc = Pca.secondMoment(Pca.quantized(batch), dim)
-          val rows = acc.indices.collect {
-            case idx if acc(idx) != 0L => (idx / dim, idx % dim, acc(idx))
-          }
-          val sess = batch.sparkSession
-          import sess.implicits._
-          state.endBatch(sess, batchId, "sm" -> rows.toDF("i", "j", "c"))
-        }
-        Replay.maybePoison(batchId)
-        ()
+    StreamFold.fold(StreamFold.parquet(spark, pcaStreamSchema, stagedDir,
+        maxFilesPerTrigger, Some("*.parquet")), state) { (batch, _) =>
+      val acc = Pca.secondMoment(Pca.quantized(batch), dim)
+      val rows = acc.indices.collect {
+        case idx if acc(idx) != 0L => (idx / dim, idx % dim, acc(idx))
       }
-      .start()
-    q.awaitTermination()
+      val sess = batch.sparkSession
+      import sess.implicits._
+      Delta("sm" -> rows.toDF("i", "j", "c"))
+    }
     val folded = state.read(spark, "sm").groupBy("i", "j")
       .agg(sum("c").as("c")).collect()
     val second = new Array[Long](dim * dim)
@@ -449,38 +335,19 @@ object PqStream {
                      compactEvery: Int = 16,
                      workDir: Option[String] = None): DataFrame = {
     import graft.similarity.Pca
-    val work = workDir match {
-      case Some(w) =>
-        Files.createDirectories(java.nio.file.Paths.get(w)); w
-      case None =>
-        val t = Files.createTempDirectory("graft_sembdrift").toString
-        Replay.cleanupAtExit(t); t
-    }
     val wiSchema = StructType(Seq(
       StructField("w", LongType),
       StructField("i", IntegerType),
       StructField("s", LongType),
       StructField("n", LongType)))
-    val state = new AppendOnlyState(work, Seq(("wi", wiSchema)), compactEvery,
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_sembdrift"),
+      Seq(("wi", wiSchema)), compactEvery,
       folds = Map("wi" -> ((df: DataFrame) =>
         df.groupBy("w", "i").agg(sum("s").as("s"), sum("n").as("n")))))
-    val q = spark.readStream.schema(pcaStreamSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "wi" -> Pca.embDriftSums(Pca.quantized(batch), span))
-        }
-        Replay.maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    StreamFold.fold(StreamFold.parquet(spark, pcaStreamSchema, stagedDir,
+        maxFilesPerTrigger, Some("*.parquet")), state) { (batch, _) =>
+      Delta("wi" -> Pca.embDriftSums(Pca.quantized(batch), span))
+    }
     Pca.embDriftReport(
       state.read(spark, "wi").groupBy("w", "i")
         .agg(sum("s").as("s"), sum("n").as("n")), alarm)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
+import graft.streaming.StreamFold.Delta
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -52,14 +52,14 @@ object Replay {
     * accumulated state. OFF by default: the count is one extra Spark job
     * per micro-batch, which production/bench runs must not pay — a spec
     * flips `recordBandRows` on around its invocation. Cleared at each
-    * invocation; foreachBatch runs sequentially within a stream, and
+    * invocation; micro-batches run sequentially within a stream, and
     * concurrent streams would interleave (test-only surface). */
   private[graft] val bandRowsPerBatch = new scala.collection.mutable.ArrayBuffer[Long]()
   @volatile private[graft] var recordBandRows = false
 
   /** Test-only fault injection for the restart specs: when armed (>= 0),
     * the restartable streams throw AFTER completing the given batch's
-    * state writes but BEFORE foreachBatch returns — i.e. inside the
+    * state writes but BEFORE its micro-batch returns — i.e. inside the
     * at-least-once window between the state append and the streaming
     * checkpoint commit, the hardest crash point (the restarted stream
     * must REPLAY that batch against state that already contains it).
@@ -80,18 +80,6 @@ object Replay {
     sc.setJobDescription(desc)
     try f finally sc.setJobDescription(old)
   }
-
-  /** Resolve a caller-supplied durable work dir (restartable: state and
-    * streaming checkpoint live side by side and reload together) or a
-    * fresh temp dir cleaned at JVM exit (the one-shot form). */
-  private def resolveWork(workDir: Option[String], prefix: String): String =
-    workDir match {
-      case Some(w) =>
-        Files.createDirectories(java.nio.file.Paths.get(w)); w
-      case None =>
-        val t = Files.createTempDirectory(prefix).toString
-        cleanupAtExit(t); t
-    }
 
   val eventsSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
@@ -146,7 +134,7 @@ object Replay {
       .filter(col("rn") === 1).drop("rn")
   }
 
-  /** K2 streaming form: latest-wins keyed upsert via foreachBatch.
+  /** K2 streaming form: latest-wins keyed upsert (`StreamFold`).
     * AvailableNow replay of the whole lake == batch q8_latest_per_key.
     *
     * Each micro-batch appends only its own within-batch winners — O(batch)
@@ -156,45 +144,23 @@ object Replay {
     * be the engine's scale-killer). `AppendOnlyState` applies the same
     * latest-wins fold at compaction, so durable state also stays
     * O(distinct users), and the final read folds the appended generations
-    * once.
-    *
-    * Restart contract (shared by all foreachBatch state in this object):
-    * every stream's state lives NEXT TO its streaming checkpoint under one
-    * `work` dir and the two reload together — already-ingested files are
-    * skipped AND their state is still there. A batch replayed from the
-    * at-least-once window recomputes the same delta from the same input
-    * batch and OVERWRITES its own batch-keyed subdir instead of appending
-    * twice; a batch already folded by compaction is skipped wholesale.
-    * Pass `workDir` for the durable/restartable form; the default is a
-    * fresh temp dir per invocation (one-shot, cleaned at JVM exit). */
+    * once. */
   def streamUpsert(spark: SparkSession, dir: String,
                    workDir: Option[String] = None,
                    pathGlobFilter: String = "events.parquet",
                    maxFilesPerTrigger: Option[Int] = None,
                    compactEvery: Int = 16): DataFrame = {
-    val work = resolveWork(workDir, "graft_upsert")
     val stateSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("event_id", LongType),
       StructField("event_type", StringType), StructField("ts", TimestampType)))
-    val state = new AppendOnlyState(work, Seq(("latest", stateSchema)),
-      compactEvery, folds = Map("latest" -> (latestWins _)))
-
-    val q = eventStream(spark, dir, pathGlobFilter, maxFilesPerTrigger)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val delta = latestWins(
-            batch.select("user_id", "event_id", "event_type", "ts"))
-          state.endBatch(batch.sparkSession, batchId, "latest" -> delta)
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_upsert"),
+      Seq(("latest", stateSchema)), compactEvery,
+      folds = Map("latest" -> (latestWins _)))
+    StreamFold.fold(eventStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, _) =>
+      Delta("latest" ->
+        latestWins(batch.select("user_id", "event_id", "event_type", "ts")))
+    }
     latestWins(state.read(spark, "latest"))
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("ts_us"))
@@ -208,6 +174,10 @@ object Replay {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
+  private def docStream(spark: SparkSession, dir: String, pathGlobFilter: String,
+                        maxFilesPerTrigger: Int): DataFrame =
+    StreamFold.parquet(spark, docsSchema, dir, maxFilesPerTrigger, Some(pathGlobFilter))
+
   /** Streaming incremental corpus dedup — the arrival-time form of
     * qd1_dedup_exact: documents stream in, each micro-batch folds its
     * per-hash (min doc_id, count) aggregate into the accumulated state.
@@ -220,9 +190,7 @@ object Replay {
     * rows and I/O; the (min, sum) fold runs at compaction and at the
     * final read, so accumulated state is never rewritten per batch. At
     * 100 TB the state table would be a transactional keyed table; the
-    * append-dir scheme keeps the semantics. Same restart contract as
-    * `streamUpsert`: a replayed batch recomputes the same delta and
-    * overwrites its own batch-keyed subdir — appending a second copy
+    * append-dir scheme keeps the semantics. A double-applied batch
     * would double-count `n_copies`, which the exact-count oracle would
     * catch. */
   def streamCorpusDedup(spark: SparkSession, dir: String,
@@ -230,7 +198,6 @@ object Replay {
                         pathGlobFilter: String = "*.parquet",
                         workDir: Option[String] = None,
                         compactEvery: Int = 16): DataFrame = {
-    val work = resolveWork(workDir, "graft_sdedup")
     val aggSchema = StructType(Seq(
       StructField("text_hash", StringType),
       StructField("keep_doc_id", LongType),
@@ -239,59 +206,26 @@ object Replay {
       df.groupBy("text_hash")
         .agg(min("keep_doc_id").as("keep_doc_id"),
           sum("n_copies").as("n_copies"))
-    val state = new AppendOnlyState(work, Seq(("agg", aggSchema)),
-      compactEvery, folds = Map("agg" -> (fold _)))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val delta = batch
-            .groupBy(md5(col("text")).as("text_hash"))
-            .agg(min("doc_id").as("keep_doc_id"),
-              count(lit(1)).as("n_copies"))
-          state.endBatch(batch.sparkSession, batchId, "agg" -> delta)
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_sdedup"),
+      Seq(("agg", aggSchema)), compactEvery, folds = Map("agg" -> (fold _)))
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, _) =>
+      Delta("agg" -> batch.groupBy(md5(col("text")).as("text_hash"))
+        .agg(min("doc_id").as("keep_doc_id"), count(lit(1)).as("n_copies")))
+    }
     fold(state.read(spark, "agg"))
       .select("text_hash", "keep_doc_id", "n_copies")
       .orderBy("keep_doc_id")
   }
 
   /** qs10 entry: the documents table staged as TWO id-range files and
-    * consumed one file per micro-batch, so the ORACLE-CHECKED run itself
-    * exercises the cross-batch (min, sum) state fold — a single-batch
-    * replay of the shared lake would check only the batch aggregate.
-    * (Same minimal boundary-crossing shape as qs15; deeper splits,
-    * shuffled arrival, and restart live in the specs.)
-    *
-    * The two-file staging copy is INPUT scaffolding, not computed state,
-    * so it is memoized per source-corpus contents (`Tables.contentKey`)
-    * for the session — a bench suite stages once across passes instead of
-    * rewriting the full documents table per pass. The stream itself (and
-    * its state fold) still runs in full on every invocation. */
-  private[streaming] val stagedLakes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def qs10StreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stagedLakes.computeIfAbsent(
-      graft.Tables.contentKey(s"$dir/documents.parquet"), _ => {
-        val t = Files.createTempDirectory("graft_sdedup_lake").toString
-        cleanupAtExit(t)
-        graft.Tables(spark, dir, "documents")
-          .repartitionByRange(2, col("doc_id"))
-          .write.mode("overwrite").parquet(t)
-        t
-      })
-    streamCorpusDedup(spark, staged, maxFilesPerTrigger = 1)
-  }
+    * consumed one file per micro-batch (`stagedDocsLake`), so the
+    * ORACLE-CHECKED run itself exercises the cross-batch (min, sum) state
+    * fold — a single-batch replay of the shared lake would check only the
+    * batch aggregate. (Same minimal boundary-crossing shape as qs15;
+    * deeper splits, shuffled arrival, and restart live in the specs.) */
+  def qs10StreamDedup(spark: SparkSession, dir: String): DataFrame =
+    streamCorpusDedup(spark, stagedDocsLake(spark, dir), maxFilesPerTrigger = 1)
 
   /** Streaming incremental duplicated-SPAN detection — the arrival-time
     * form of qd23_dup_spans (substring-level dedup): documents stream in,
@@ -320,18 +254,14 @@ object Replay {
     * folded marks equal qd23's count-window marks regardless of arrival
     * order or batch boundaries, and the driver hash-checks this stream
     * against the same SQL oracle. Span merge + text reconstruction are
-    * literally shared code (`TextOps.spansFromMarks`).
-    *
-    * Same restart contract as the sibling streams: state and checkpoint
-    * reload together under `workDir`; a replayed batch excludes its own
-    * crashed writes from the probe and overwrites its batch-keyed dirs. */
+    * literally shared code (`TextOps.spansFromMarks`). A replayed batch
+    * excludes its own crashed writes from the probe. */
   def streamDupSpans(spark: SparkSession, dir: String,
                      k: Int = 8,
                      maxFilesPerTrigger: Int = 1,
                      pathGlobFilter: String = "*.parquet",
                      workDir: Option[String] = None,
                      compactEvery: Int = 16): DataFrame = {
-    val work = resolveWork(workDir, "graft_sspans")
     val occSchema = StructType(Seq(
       StructField("k1", LongType),
       StructField("k2", LongType),
@@ -340,65 +270,50 @@ object Replay {
     val marksSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("pos", LongType)))
-    val state = new AppendOnlyState(work,
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_sspans"),
       Seq(("occ", occSchema), ("marks", marksSchema)), compactEvery,
       folds = Map("marks" -> ((df: DataFrame) => df.distinct())))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val ss = batch.sparkSession
-          import ss.implicits._
-          val b = batch.select("doc_id", "text").as[(Long, String)]
-            .flatMap { case (id, text) =>
-              graft.operators.TextOps.positionalShingles(text, k)
-                .map { case (p, s) => (id, p, s) } }
-            .toDF("doc_id", "pos", "shingle")
-            // 128-bit digest key, the qd23/Collapse shape: the count
-            // window, the state, and the probes all move 16-byte keys
-            // instead of window text (see qd23DupSpans' collision note)
-            .select(xxhash64(lit(1), col("shingle")).as("k1"),
-              xxhash64(lit(2), col("shingle")).as("k2"),
-              col("doc_id"), col("pos"))
-            .persist() // consumed by 3 jobs below; O(batch) rows
-          try {
-            // count window, NOT the qd23 aggregate+join form: inside
-            // foreachBatch AQE is off and `b` is cache-backed — the
-            // join form scans and shuffles the cached batch twice,
-            // measured 15.1 → 18.0 s at sf1; the window's single
-            // shuffle+sort of the batch wins here
-            val wOcc = org.apache.spark.sql.expressions.Window.partitionBy("k1", "k2")
-            val dupB = b.withColumn("n", count(lit(1)).over(wOcc))
-              .filter(col("n") >= 2).select("doc_id", "pos")
-            val prior = state.read(ss, "occ", excludeBatch = Some(batchId))
-            val bSh = b.select("k1", "k2").distinct()
-            // state scans through; only skinny batch shingles broadcast
-            val hitPrior = prior.join(broadcast(bSh), Seq("k1", "k2"))
-            val hitSh = hitPrior.select("k1", "k2").distinct()
-            val batchHitPos = b.join(broadcast(hitSh), Seq("k1", "k2"))
-            // NO per-batch distinct: the marks table's compaction fold IS
-            // distinct and the snapshot read applies distinct again, so
-            // the in-batch shuffle bought nothing — appends stay O(batch)
-            // (≤ 3 rows per batch position + prior hits) with duplicates
-            // collapsed at read, one exchange fewer per micro-batch
-            val marks = dupB
-              .union(batchHitPos.select("doc_id", "pos"))
-              .union(hitPrior.select("doc_id", "pos"))
-            state.endBatch(ss, batchId,
-              "occ" -> b.select("k1", "k2", "doc_id", "pos"),
-              "marks" -> marks)
-          } finally { b.unpersist(); () }
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, batchId) =>
+      val ss = batch.sparkSession
+      import ss.implicits._
+      val b = batch.select("doc_id", "text").as[(Long, String)]
+        .flatMap { case (id, text) =>
+          graft.operators.TextOps.positionalShingles(text, k)
+            .map { case (p, s) => (id, p, s) } }
+        .toDF("doc_id", "pos", "shingle")
+        // 128-bit digest key, the qd23/Collapse shape: the count
+        // window, the state, and the probes all move 16-byte keys
+        // instead of window text (see qd23DupSpans' collision note)
+        .select(xxhash64(lit(1), col("shingle")).as("k1"),
+          xxhash64(lit(2), col("shingle")).as("k2"),
+          col("doc_id"), col("pos"))
+        .persist() // consumed by the commit's jobs; O(batch) rows
+      // count window, NOT the qd23 aggregate+join form: inside the
+      // micro-batch AQE is off and `b` is cache-backed — the join form
+      // scans and shuffles the cached batch twice, measured 15.1 → 18.0 s
+      // at sf1; the window's single shuffle+sort of the batch wins here
+      val wOcc = org.apache.spark.sql.expressions.Window.partitionBy("k1", "k2")
+      val dupB = b.withColumn("n", count(lit(1)).over(wOcc))
+        .filter(col("n") >= 2).select("doc_id", "pos")
+      val prior = state.read(ss, "occ", excludeBatch = Some(batchId))
+      val bSh = b.select("k1", "k2").distinct()
+      // state scans through; only skinny batch shingles broadcast
+      val hitPrior = prior.join(broadcast(bSh), Seq("k1", "k2"))
+      val hitSh = hitPrior.select("k1", "k2").distinct()
+      val batchHitPos = b.join(broadcast(hitSh), Seq("k1", "k2"))
+      // NO per-batch distinct: the marks table's compaction fold IS
+      // distinct and the snapshot read applies distinct again, so the
+      // in-batch shuffle bought nothing — appends stay O(batch) (≤ 3 rows
+      // per batch position + prior hits) with duplicates collapsed at
+      // read, one exchange fewer per micro-batch
+      val marks = dupB
+        .union(batchHitPos.select("doc_id", "pos"))
+        .union(hitPrior.select("doc_id", "pos"))
+      Delta(Seq("occ" -> (() => b.select("k1", "k2", "doc_id", "pos")),
+          "marks" -> (() => marks)),
+        release = () => { b.unpersist(); () })
+    }
     val marked = state.read(spark, "marks").distinct()
     val tokArr = spark.read.schema(docsSchema)
       .option("pathGlobFilter", pathGlobFilter).parquet(dir)
@@ -406,22 +321,11 @@ object Replay {
     graft.operators.TextOps.spansFromMarks(marked, tokArr, k)
   }
 
-  /** qs16 entry: the same two-id-range-file staging as qs10 (shared
-    * memo — a bench suite stages the lake once for both), so the
+  /** qs16 entry: the same two-id-range-file staging as qs10, so the
     * oracle-checked run itself crosses a batch boundary and exercises
     * the retroactive probe-mark path, not just the within-batch count. */
-  def qs16StreamDupSpans(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stagedLakes.computeIfAbsent(
-      graft.Tables.contentKey(s"$dir/documents.parquet"), _ => {
-        val t = Files.createTempDirectory("graft_sdedup_lake").toString
-        cleanupAtExit(t)
-        graft.Tables(spark, dir, "documents")
-          .repartitionByRange(2, col("doc_id"))
-          .write.mode("overwrite").parquet(t)
-        t
-      })
-    streamDupSpans(spark, staged, k = 8)
-  }
+  def qs16StreamDupSpans(spark: SparkSession, dir: String): DataFrame =
+    streamDupSpans(spark, stagedDocsLake(spark, dir), k = 8)
 
   /** Streaming incremental DSIR data selection — the arrival-time form
     * of qd26_dsir_weights (Xie et al., "Data Selection for Language
@@ -468,20 +372,15 @@ object Replay {
     * you: the model keeps LEARNING from every arriving shard (target and
     * raw counts both accumulate), and any snapshot read scores the docs
     * seen so far under the model of everything seen so far — rescoring
-    * under tomorrow's model is a read, not a re-ingest.
-    *
-    * Same restart contract as the sibling streams: state and checkpoint
-    * reload together under `workDir`; a batch replayed from the
-    * at-least-once window overwrites its own batch-keyed subdirs, which
-    * the exact-count oracle would catch if it double-appended (`n` and
-    * `ct` would inflate, dragging `cr` and every 6-dp score along). */
+    * under tomorrow's model is a read, not a re-ingest. A double-applied
+    * batch would inflate `n` and `ct`, dragging `cr` and every 6-dp score
+    * along, which the exact-count oracle would catch. */
   def streamDsir(spark: SparkSession, dir: String,
                  buckets: Int = 1024,
                  maxFilesPerTrigger: Int = 1,
                  pathGlobFilter: String = "*.parquet",
                  workDir: Option[String] = None,
                  compactEvery: Int = 16): DataFrame = {
-    val work = resolveWork(workDir, "graft_sdsir")
     val cntSchema = StructType(Seq(
       StructField("bucket", IntegerType),
       StructField("ct", LongType)))
@@ -489,44 +388,27 @@ object Replay {
       StructField("doc_id", LongType),
       StructField("bucket", IntegerType),
       StructField("n", LongType)))
-    val state = new AppendOnlyState(work,
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_sdsir"),
       Seq(("cnt", cntSchema), ("feat", featSchema)), compactEvery,
       folds = Map(
         "cnt" -> ((df: DataFrame) => df.groupBy("bucket")
           .agg(sum("ct").as("ct"))),
         "feat" -> ((df: DataFrame) => df.groupBy("doc_id", "bucket")
           .agg(sum("n").as("n")))))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val ss = batch.sparkSession
-          // split on the id BEFORE the kernel: the ~5% target side is
-          // the only input the model delta needs, and the raw side's
-          // instance rows are the state append itself — neither delta
-          // shuffles full-width and nothing is persisted (the two
-          // state writes run concurrently inside endBatch, each
-          // consuming its own one-pass plan)
-          val isT = graft.operators.TextOps.dsirIsTarget(col("doc_id"))
-          val cntDelta = graft.operators.TextOps
-            .dsirBucketed(batch.filter(isT), buckets)
-            .groupBy("bucket").agg(count(lit(1)).as("ct"))
-          val featDelta = graft.operators.TextOps
-            .dsirBucketed(batch.filter(!isT), buckets)
-            .select(col("doc_id"), col("bucket"), lit(1L).as("n"))
-          state.endBatch(ss, batchId,
-            "cnt" -> cntDelta, "feat" -> featDelta)
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, _) =>
+      // split on the id BEFORE the kernel: the ~5% target side is the
+      // only input the model delta needs, and the raw side's instance rows
+      // are the state append itself — neither delta shuffles full-width
+      // and nothing is persisted (the two state writes run concurrently
+      // inside the commit, each consuming its own one-pass plan)
+      val isT = graft.operators.TextOps.dsirIsTarget(col("doc_id"))
+      Delta(
+        "cnt" -> graft.operators.TextOps.dsirBucketed(batch.filter(isT), buckets)
+          .groupBy("bucket").agg(count(lit(1)).as("ct")),
+        "feat" -> graft.operators.TextOps.dsirBucketed(batch.filter(!isT), buckets)
+          .select(col("doc_id"), col("bucket"), lit(1L).as("n")))
+    }
     val feat = state.read(spark, "feat")
       .groupBy("doc_id", "bucket").agg(sum("n").as("n"))
     val ct = state.read(spark, "cnt")
@@ -541,23 +423,12 @@ object Replay {
       .orderBy("doc_id")
   }
 
-  /** qs17 entry: the same two-id-range-file staging as qs10/qs16 (shared
-    * per-contents memo), so the oracle-checked run crosses a batch
-    * boundary and the scored result folds model counts from BOTH batches
-    * — a single-batch replay would never separate the model delta from
-    * the model. */
-  def qs17StreamDsir(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stagedLakes.computeIfAbsent(
-      graft.Tables.contentKey(s"$dir/documents.parquet"), _ => {
-        val t = Files.createTempDirectory("graft_sdedup_lake").toString
-        cleanupAtExit(t)
-        graft.Tables(spark, dir, "documents")
-          .repartitionByRange(2, col("doc_id"))
-          .write.mode("overwrite").parquet(t)
-        t
-      })
-    streamDsir(spark, staged)
-  }
+  /** qs17 entry: the same two-id-range-file staging as qs10/qs16, so the
+    * oracle-checked run crosses a batch boundary and the scored result
+    * folds model counts from BOTH batches — a single-batch replay would
+    * never separate the model delta from the model. */
+  def qs17StreamDsir(spark: SparkSession, dir: String): DataFrame =
+    streamDsir(spark, stagedDocsLake(spark, dir))
 
   /** Streaming incremental domain-drift monitoring — the arrival-time
     * form of qd30_domain_drift, and the configuration the report is
@@ -570,80 +441,64 @@ object Replay {
     * fold keeps compacted state at O(B × sources) rows, and any
     * snapshot read folds the counts and derives the exact batch report
     * (`TextOps.driftReport` — integer nano-nat contributions, so not
-    * even summation order can diverge). Restart contract as siblings:
-    * batch-keyed overwrites, `alreadyFolded` skip, kill-tested. */
+    * even summation order can diverge). */
   def streamDrift(spark: SparkSession, dir: String,
                   buckets: Int = 1024,
                   maxFilesPerTrigger: Int = 1,
                   pathGlobFilter: String = "*.parquet",
                   workDir: Option[String] = None,
                   compactEvery: Int = 16): DataFrame = {
-    val work = resolveWork(workDir, "graft_sdrift")
     val sbSchema = StructType(Seq(
       StructField("source", StringType),
       StructField("bucket", IntegerType),
       StructField("c", LongType)))
-    val state = new AppendOnlyState(work, Seq(("sb", sbSchema)), compactEvery,
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_sdrift"),
+      Seq(("sb", sbSchema)), compactEvery,
       folds = Map("sb" -> ((df: DataFrame) => df.groupBy("source", "bucket")
         .agg(sum("c").as("c")))))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "sb" -> graft.operators.TextOps.driftBucketed(batch, buckets))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, _) =>
+      Delta("sb" -> graft.operators.TextOps.driftBucketed(batch, buckets))
+    }
     graft.operators.TextOps.driftReport(
       state.read(spark, "sb").groupBy("source", "bucket").agg(sum("c").as("c")),
       buckets)
   }
 
-  /** qs19 entry: the same two-id-range-file staging as qs10/qs16/qs17
-    * (shared per-contents memo), so the oracle-checked run folds count
-    * deltas from BOTH batches. Shares qd30's oracle SQL verbatim. */
+  /** qs19 entry: the same two-id-range-file staging as qs10/qs16/qs17,
+    * so the oracle-checked run folds count deltas from BOTH batches.
+    * Shares qd30's oracle SQL verbatim. */
   def qs19StreamDrift(spark: SparkSession, dir: String): DataFrame =
     streamDrift(spark, stagedDocsLake(spark, dir))
 
+  /** The documents table staged as TWO id-range files, shared by every
+    * docs-lake stream entry (qs10, qs16, qs17, ...). */
   private def stagedDocsLake(spark: SparkSession, dir: String): String =
-    stagedLakes.computeIfAbsent(
-      graft.Tables.contentKey(s"$dir/documents.parquet"), _ => {
-        val t = Files.createTempDirectory("graft_sdedup_lake").toString
-        cleanupAtExit(t)
-        graft.Tables(spark, dir, "documents")
-          .repartitionByRange(2, col("doc_id"))
-          .write.mode("overwrite").parquet(t)
-        // identity invariant (ADVICE r20): consumers share SOURCE-keyed
-        // memo entries (qs36's unigram pieces, the ticketed signature
-        // shares) on the premise that the lake is the identical document
-        // multiset. The staging is a pure repartition, so row-count
-        // equality pins that premise against a partially-written lake or
-        // a future filter/transform slipping into the staging — checked
-        // ONCE per (session, corpus) at lake creation, not per stream.
-        val staged = spark.read.schema(docsSchema).parquet(t).count()
-        val src = graft.Tables(spark, dir, "documents").count()
-        require(staged == src,
-          s"staged docs lake $t holds $staged rows but the source corpus " +
-            s"has $src — source-keyed model memos would be mismatched")
-        t
-      })
+    StreamFold.stage(graft.Tables.contentKey(s"$dir/documents.parquet"),
+        "graft_sdedup_lake") { t =>
+      graft.Tables(spark, dir, "documents")
+        .repartitionByRange(2, col("doc_id"))
+        .write.mode("overwrite").parquet(t)
+      // identity invariant (ADVICE r20): consumers share SOURCE-keyed
+      // memo entries (qs36's unigram pieces, the ticketed signature
+      // shares) on the premise that the lake is the identical document
+      // multiset. The staging is a pure repartition, so row-count
+      // equality pins that premise against a partially-written lake or
+      // a future filter/transform slipping into the staging — checked
+      // ONCE per corpus at lake creation, not per stream.
+      val staged = spark.read.schema(docsSchema).parquet(t).count()
+      val src = graft.Tables(spark, dir, "documents").count()
+      require(staged == src,
+        s"staged docs lake $t holds $staged rows but the source corpus " +
+          s"has $src — source-keyed model memos would be mismatched")
+    }
 
   /** Streaming WINDOWED drift alarms — qs21, the arrival-time form of
     * qd31: per-batch (source, window, bucket) count deltas (window =
     * doc_id div span, deterministic under replay where a wall-clock
     * window would not be) fold into O(B × sources × windows) state;
     * any snapshot read derives the exact per-(source, window)
-    * window-vs-lifetime JS report. Restart contract as the siblings:
-    * batch-keyed overwrites, `alreadyFolded` skip, kill-tested. */
+    * window-vs-lifetime JS report. */
   def streamWindowedDrift(spark: SparkSession, dir: String,
                           buckets: Int = 1024,
                           span: Long = 250L,
@@ -651,33 +506,20 @@ object Replay {
                           pathGlobFilter: String = "*.parquet",
                           workDir: Option[String] = None,
                           compactEvery: Int = 16): DataFrame = {
-    val work = resolveWork(workDir, "graft_swdrift")
     val swbSchema = StructType(Seq(
       StructField("source", StringType),
       StructField("w", LongType),
       StructField("bucket", IntegerType),
       StructField("c", LongType)))
-    val state = new AppendOnlyState(work, Seq(("swb", swbSchema)), compactEvery,
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_swdrift"),
+      Seq(("swb", swbSchema)), compactEvery,
       folds = Map("swb" -> ((df: DataFrame) => df.groupBy("source", "w", "bucket")
         .agg(sum("c").as("c")))))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "swb" -> graft.operators.TextOps.windowedDriftBucketed(
-              batch, buckets, span))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, _) =>
+      Delta("swb" ->
+        graft.operators.TextOps.windowedDriftBucketed(batch, buckets, span))
+    }
     graft.operators.TextOps.windowedDriftReport(
       state.read(spark, "swb").groupBy("source", "w", "bucket")
         .agg(sum("c").as("c")),
@@ -698,15 +540,13 @@ object Replay {
     * ride beside it for the estimate-vs-exact quality report (the q25
     * HLL / q36 GK pattern — hash-checked, not tolerance-checked); a
     * deployment that trusted the sketch would drop `tc` and keep state
-    * at exactly D × W longs. Restart contract as the drift siblings:
-    * batch-keyed overwrites, `alreadyFolded` skip, kill-tested. */
+    * at exactly D × W longs. */
   def streamCms(spark: SparkSession, dir: String,
                 width: Int = 16, depth: Int = 4,
                 maxFilesPerTrigger: Int = 1,
                 pathGlobFilter: String = "*.parquet",
                 workDir: Option[String] = None,
                 compactEvery: Int = 16): DataFrame = {
-    val work = resolveWork(workDir, "graft_scms")
     val skSchema = StructType(Seq(
       StructField("j", IntegerType),
       StructField("bucket", IntegerType),
@@ -714,32 +554,19 @@ object Replay {
     val tcSchema = StructType(Seq(
       StructField("term", StringType),
       StructField("c", LongType)))
-    val state = new AppendOnlyState(work,
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_scms"),
       Seq(("sk", skSchema), ("tc", tcSchema)), compactEvery,
       folds = Map(
         "sk" -> ((df: DataFrame) => df.groupBy("j", "bucket")
           .agg(sum("c").as("c"))),
         "tc" -> ((df: DataFrame) => df.groupBy("term")
           .agg(sum("c").as("c")))))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val tcDelta = graft.operators.TextOps.cmsTermCounts(batch)
-          state.endBatch(batch.sparkSession, batchId,
-            "sk" -> graft.operators.TextOps.cmsSketch(tcDelta, width, depth),
-            "tc" -> tcDelta)
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, _) =>
+      val tcDelta = graft.operators.TextOps.cmsTermCounts(batch)
+      Delta("sk" -> graft.operators.TextOps.cmsSketch(tcDelta, width, depth),
+        "tc" -> tcDelta)
+    }
     graft.operators.TextOps.cmsReport(
       state.read(spark, "sk").groupBy("j", "bucket").agg(sum("c").as("c")),
       state.read(spark, "tc").groupBy("term").agg(sum("c").as("c")),
@@ -764,9 +591,7 @@ object Replay {
     * append-only; the stats row is a sum monoid whose terms are
     * integer-valued doubles, so the folded avgdl is bit-equal to the
     * batch `avg` and the final ranking folds to exactly qd8 across any
-    * batch boundary (shared oracle SQL). Restart contract as the
-    * sketch siblings: batch-keyed overwrites, `alreadyFolded` skip,
-    * kill-tested. */
+    * batch boundary (shared oracle SQL). */
   def streamBm25(spark: SparkSession, dir: String,
                  queryTerms: Seq[String] = Seq("spark", "query", "window"),
                  topK: Int = 10,
@@ -774,7 +599,6 @@ object Replay {
                  pathGlobFilter: String = "*.parquet",
                  workDir: Option[String] = None,
                  compactEvery: Int = 16): DataFrame = {
-    val work = resolveWork(workDir, "graft_sbm25")
     val ptSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("term", StringType),
@@ -785,30 +609,16 @@ object Replay {
     val csSchema = StructType(Seq(
       StructField("n_docs", LongType),
       StructField("sum_dl", DoubleType)))
-    val state = new AppendOnlyState(work,
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_sbm25"),
       Seq(("pt", ptSchema), ("dl", dlSchema), ("cs", csSchema)), compactEvery,
       folds = Map(
         "cs" -> ((df: DataFrame) => df.agg(
           sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl")))))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val (pt, dl, cs) =
-            graft.text.Search.bm25BatchDeltas(batch, queryTerms)
-          state.endBatch(batch.sparkSession, batchId,
-            "pt" -> pt, "dl" -> dl, "cs" -> cs)
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, _) =>
+      val (pt, dl, cs) = graft.text.Search.bm25BatchDeltas(batch, queryTerms)
+      Delta("pt" -> pt, "dl" -> dl, "cs" -> cs)
+    }
     val stats = state.read(spark, "cs")
       .agg(sum("n_docs").as("nl"), sum("sum_dl").as("sdl"))
       .select(col("nl").cast("double").as("n"),
@@ -833,9 +643,7 @@ object Replay {
     * report rebuilds both rankings from state with the SAME factored
     * tails the batch form uses (bm25From / denseRanked / rrfFuse), so
     * the fused ranking folds to exactly qd40 across any batch boundary
-    * and the oracle SQL is shared verbatim. Restart contract as the
-    * family: batch-keyed overwrites, `alreadyFolded` skip,
-    * kill-tested. */
+    * and the oracle SQL is shared verbatim. */
   def streamHybridRrf(spark: SparkSession, dir: String,
                       queryTerms: Seq[String] = Seq("spark", "query", "window"),
                       candK: Int = graft.text.Search.HybridCandK,
@@ -844,7 +652,6 @@ object Replay {
                       pathGlobFilter: String = "*.parquet",
                       workDir: Option[String] = None,
                       compactEvery: Int = 16): DataFrame = {
-    val work = resolveWork(workDir, "graft_shybrid")
     val ptSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("term", StringType),
@@ -862,47 +669,31 @@ object Replay {
     val dnSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("dnorm", DoubleType)))
-    val state = new AppendOnlyState(work,
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_shybrid"),
       Seq(("pt", ptSchema), ("dl", dlSchema), ("cs", csSchema),
         ("dt", dtSchema), ("dn", dnSchema)), compactEvery,
       folds = Map(
         "cs" -> ((df: DataFrame) => df.agg(
           sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl")))))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val ss = batch.sparkSession
-          // the dense side's per-batch docTf checkpoint (the md5-per-token
-          // pass) is the batch's only SERIAL job — start it on a future so
-          // the sparse-side appends overlap it (guide §2.6); the dt/dn
-          // append thunks then block on it inside endBatchWork's pool
-          // while pt/dl/cs write concurrently. Await.result rethrows the
-          // original failure, so an error surfaces exactly as before.
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
-          val htfF = Future {
-            labeled(ss, "hybrid: batch docTf")(
-              graft.text.Search.htfBatchDeltas(batch, queryTerms))
-          }
-          val (pt, dl, cs) =
-            graft.text.Search.bm25BatchDeltas(batch, queryTerms)
-          state.endBatchWork(ss, batchId, Nil,
-            "pt" -> (() => pt), "dl" -> (() => dl), "cs" -> (() => cs),
-            "dt" -> (() => Await.result(htfF, Duration.Inf)._1),
-            "dn" -> (() => Await.result(htfF, Duration.Inf)._2))
-        }
-        maybePoison(batchId)
-        ()
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, _) =>
+      // the dense side's per-batch docTf checkpoint (the md5-per-token
+      // pass) is the batch's only SERIAL job — start it on a future so the
+      // sparse-side appends overlap it (guide §2.6); the dt/dn append
+      // thunks then block on it inside the commit's pool while pt/dl/cs
+      // write concurrently. Await.result rethrows the original failure.
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration.Duration
+      val htfF = Future {
+        labeled(batch.sparkSession, "hybrid: batch docTf")(
+          graft.text.Search.htfBatchDeltas(batch, queryTerms))
       }
-      .start()
-    q.awaitTermination()
+      val (pt, dl, cs) = graft.text.Search.bm25BatchDeltas(batch, queryTerms)
+      Delta(Seq("pt" -> (() => pt), "dl" -> (() => dl), "cs" -> (() => cs),
+        "dt" -> (() => Await.result(htfF, Duration.Inf)._1),
+        "dn" -> (() => Await.result(htfF, Duration.Inf)._2)))
+    }
     val stats = state.read(spark, "cs")
       .agg(sum("n_docs").as("nl"), sum("sum_dl").as("sdl"))
       .select(col("nl").cast("double").as("n"),
@@ -930,38 +721,24 @@ object Replay {
     * append-only hash index. Hashes are immutable facts, so the
     * snapshot read's dup-group window over the accumulated index folds
     * to exactly the batch report — a dup pair whose members arrived in
-    * different batches is found the moment the later member lands.
-    * Restart contract as the codes-index siblings: batch-keyed
-    * overwrites, `alreadyFolded` skip — a double-appended batch would
-    * duplicate (media_id, dhash) rows and break the report's
-    * one-row-per-image shape, which the shared qm4 oracle catches. */
+    * different batches is found the moment the later member lands. A
+    * double-appended batch would duplicate (media_id, dhash) rows and
+    * break the report's one-row-per-image shape, which the shared qm4
+    * oracle catches. */
   def streamPhashDedup(spark: SparkSession, dir: String,
                        maxFilesPerTrigger: Int = 1,
                        pathGlobFilter: String = "*.parquet",
                        workDir: Option[String] = None,
                        compactEvery: Int = 16): DataFrame = {
-    val work = resolveWork(workDir, "graft_sphash")
     val hSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("dhash", StringType)))
-    val state = new AppendOnlyState(work, Seq(("h", hSchema)), compactEvery)
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "h" -> graft.enrich.Multimodal.phashFrame(batch))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_sphash"),
+      Seq(("h", hSchema)), compactEvery)
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, _) =>
+      Delta("h" -> graft.enrich.Multimodal.phashFrame(batch))
+    }
     graft.enrich.Multimodal.phashReport(state.read(spark, "h"))
   }
 
@@ -972,17 +749,12 @@ object Replay {
     * rows only — per-batch cost O(batch), embarrassingly per-row) and
     * appends its feature rows to the append-only table. Features are
     * immutable integer facts, so the snapshot read IS the report — no
-    * fold — and equals qm5 over the same corpus (shared oracle SQL).
-    * Restart contract as the family: batch-keyed overwrites,
-    * `alreadyFolded` skip; a double-appended batch would duplicate
-    * media rows and break the one-row-per-clip shape, which the shared
-    * oracle's row count catches. */
+    * fold — and equals qm5 over the same corpus (shared oracle SQL). */
   def streamAudioFeatures(spark: SparkSession, dir: String,
                           maxFilesPerTrigger: Int = 1,
                           pathGlobFilter: String = "*.parquet",
                           workDir: Option[String] = None,
                           compactEvery: Int = 16): DataFrame = {
-    val work = resolveWork(workDir, "graft_saudio")
     val afSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("sample_rate", LongType),
@@ -990,24 +762,12 @@ object Replay {
       StructField("peak", LongType),
       StructField("sum_abs", LongType),
       StructField("zero_crossings", LongType)))
-    val state = new AppendOnlyState(work, Seq(("af", afSchema)), compactEvery)
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "af" -> graft.enrich.Multimodal.audioFrame(batch))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_saudio"),
+      Seq(("af", afSchema)), compactEvery)
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, _) =>
+      Delta("af" -> graft.enrich.Multimodal.audioFrame(batch))
+    }
     state.read(spark, "af").orderBy("media_id")
   }
 
@@ -1025,42 +785,25 @@ object Replay {
     * form's factored tail (`knReport`), so every model quantity
     * (context totals, continuation counts, the type total) derives
     * from the folded monoid and the result equals qd42 exactly —
-    * shared oracle SQL. Restart contract as the family: batch-keyed
-    * overwrites, `alreadyFolded` skip; a double-folded batch inflates
-    * its bigrams' counts AND every derived quantity, which exact
-    * equality catches. */
+    * shared oracle SQL. */
   def streamKneserNey(spark: SparkSession, dir: String,
                       maxFilesPerTrigger: Int = 1,
                       pathGlobFilter: String = "*.parquet",
                       workDir: Option[String] = None,
                       compactEvery: Int = 16): DataFrame = {
-    val work = resolveWork(workDir, "graft_skn")
     val tySchema = StructType(Seq(
       StructField("hu1", LongType), StructField("hu2", LongType),
       StructField("hw1", LongType), StructField("hw2", LongType),
       StructField("c", LongType)))
-    val state = new AppendOnlyState(work, Seq(("ty", tySchema)), compactEvery,
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_skn"),
+      Seq(("ty", tySchema)), compactEvery,
       folds = Map("ty" -> ((df: DataFrame) =>
         df.groupBy("hu1", "hu2", "hw1", "hw2").agg(sum("c").as("c")))))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "ty" -> graft.operators.TextOps.knPositions(batch)
-              .groupBy("hu1", "hu2", "hw1", "hw2")
-              .agg(count(lit(1)).as("c")))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, _) =>
+      Delta("ty" -> graft.operators.TextOps.knPositions(batch)
+        .groupBy("hu1", "hu2", "hw1", "hw2").agg(count(lit(1)).as("c")))
+    }
     val snapshot = spark.read.schema(docsSchema)
       .option("pathGlobFilter", pathGlobFilter).parquet(dir)
     graft.operators.TextOps.knReport(
@@ -1081,17 +824,12 @@ object Replay {
     * per-clip metadata facts. Append-only with no fold — one row per
     * clip, O(batch) per trigger — so the converged state equals the
     * batch answer regardless of arrival order and the driver can
-    * hash-check it against qm7's SQL oracle verbatim. Restart contract
-    * as the family: batch-keyed overwrites, `alreadyFolded` skip; a
-    * double-appended batch duplicates clip rows and breaks the
-    * one-row-per-clip shape, which the shared oracle's row count
-    * catches. */
+    * hash-check it against qm7's SQL oracle verbatim. */
   def streamMp4Metadata(spark: SparkSession, dir: String,
                         maxFilesPerTrigger: Int = 1,
                         pathGlobFilter: String = "*.parquet",
                         workDir: Option[String] = None,
                         compactEvery: Int = 16): DataFrame = {
-    val work = resolveWork(workDir, "graft_smp4")
     val mmSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("brand", StringType),
@@ -1101,24 +839,12 @@ object Replay {
       StructField("n_tracks", LongType),
       StructField("codecs", StringType),
       StructField("container_bytes", LongType)))
-    val state = new AppendOnlyState(work, Seq(("mm", mmSchema)), compactEvery)
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "mm" -> graft.enrich.Multimodal.mp4Frame(batch))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_smp4"),
+      Seq(("mm", mmSchema)), compactEvery)
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, _) =>
+      Delta("mm" -> graft.enrich.Multimodal.mp4Frame(batch))
+    }
     state.read(spark, "mm").orderBy("media_id")
   }
 
@@ -1131,8 +857,7 @@ object Replay {
     * the media streaming symmetry (qs24 images, qs30 audio features,
     * qs34 video containers, qs35 audio containers): per-batch frame
     * walks (`Multimodal.mpegAudioFrame`) into an append-only per-stream
-    * metadata index. Same append-only/no-fold convergence and restart
-    * contract as qs34. (qm9/qm10/qm12/qm14 probe DEEPER layers of the
+    * metadata index. Same append-only/no-fold convergence as qs34. (qm9/qm10/qm12/qm14 probe DEEPER layers of the
     * same `.mp4` object qs34 already streams, and qm13 drives qm10's
     * plan through a transport — their arrival-time shape would be this
     * same kernel swap, so they deliberately get no separate streaming
@@ -1142,7 +867,6 @@ object Replay {
                               pathGlobFilter: String = "*.parquet",
                               workDir: Option[String] = None,
                               compactEvery: Int = 16): DataFrame = {
-    val work = resolveWork(workDir, "graft_smpeg")
     val maSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("container", StringType),
@@ -1151,24 +875,12 @@ object Replay {
       StructField("n_frames", LongType),
       StructField("duration_ms", LongType),
       StructField("stream_bytes", LongType)))
-    val state = new AppendOnlyState(work, Seq(("ma", maSchema)), compactEvery)
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "ma" -> graft.enrich.Multimodal.mpegAudioFrame(batch))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_smpeg"),
+      Seq(("ma", maSchema)), compactEvery)
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, _) =>
+      Delta("ma" -> graft.enrich.Multimodal.mpegAudioFrame(batch))
+    }
     state.read(spark, "ma").orderBy("media_id")
   }
 
@@ -1187,43 +899,28 @@ object Replay {
     * segment rows. Append-only with no fold: one row per doc, so the
     * converged state equals the batch answer regardless of arrival
     * order and the driver hash-checks it against qd43's SQL oracle
-    * verbatim. Restart contract as the family: batch-keyed overwrites,
-    * `alreadyFolded` skip; a double-appended batch duplicates doc rows,
-    * which the shared oracle's row count catches. */
+    * verbatim. */
   def streamUnigramSegment(spark: SparkSession, dir: String,
                            maxFilesPerTrigger: Int = 1,
                            pathGlobFilter: String = "*.parquet",
                            workDir: Option[String] = None,
                            compactEvery: Int = 16,
                            piecesMemoKey: Option[String] = None): DataFrame = {
-    val work = resolveWork(workDir, "graft_suniseg")
     val segSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("n_chars", LongType),
       StructField("vocab_hits", LongType),
       StructField("best_score", LongType),
       StructField("best_pieces", LongType)))
-    val state = new AppendOnlyState(work, Seq(("seg", segSchema)), compactEvery)
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_suniseg"),
+      Seq(("seg", segSchema)), compactEvery)
     // frozen model: the deterministic capped vocabulary of the corpus
     val pieces = graft.text.Unigram.inducedPieces(
       spark.read.schema(docsSchema).parquet(dir), piecesMemoKey)
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "seg" -> graft.text.Unigram.segmentWith(batch, pieces))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, _) =>
+      Delta("seg" -> graft.text.Unigram.segmentWith(batch, pieces))
+    }
     state.read(spark, "seg").orderBy("doc_id")
   }
 
@@ -1287,8 +984,8 @@ object Replay {
     * maintains BOTH curation indices per micro-batch — the near-dup
     * fold's mem/reps/pairs/bands state (O(batch) kernel + band probe,
     * `nearDupBatchDelta`) and the image perceptual-hash index
-    * (O(batch) codec pass, the qs24 fold) — committed in a single
-    * `endBatch`, so a replayed batch re-lands BOTH gates' deltas
+    * (O(batch) codec pass, the qs24 fold) — committed together in one
+    * commit, so a replayed batch re-lands BOTH gates' deltas
     * idempotently and the restart contract covers the composite. The
     * keep-list is the DERIVED view over the accumulated state (the
     * qs25 rationale: later batches can merge clusters or reveal image
@@ -1305,36 +1002,20 @@ object Replay {
                                workDir: Option[String] = None,
                                precomputedSigs: Option[DataFrame] = None): DataFrame = {
     import graft.dedup.MinHashLSH
-    val work = resolveWork(workDir, "graft_smmcur")
-    val outDir = s"$work/pairs_out"
     val hSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("dhash", StringType)))
-    val state = new AppendOnlyState(work,
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_smmcur"),
       nearDupStateSchemas :+ ("h" -> hSchema), compactEvery)
+    val outDir = s"${state.work}/pairs_out"
     bandRowsPerBatch.clear()
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        if (state.alreadyFolded(batchId)) { maybePoison(batchId) }
-        else {
-          val (ndDeltas, emitWrite) = nearDupBatchDelta(state, ss, batch,
-            batchId, threshold, precomputedSigs, outDir)
-          state.endBatchWork(ss, batchId, Seq(emitWrite),
-            (ndDeltas :+ ("h" -> graft.enrich.Multimodal.phashFrame(batch)))
-              .map { case (t, df) => (t, () => df) }: _*)
-          maybePoison(batchId)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, batchId) =>
+      val nd = nearDupBatchDelta(state, batch, batchId, threshold,
+        precomputedSigs, outDir)
+      val h = graft.enrich.Multimodal.phashFrame(batch)
+      nd.copy(appends = nd.appends :+ ("h" -> (() => h)))
+    }
     val pairs = nearDupEmissions(spark, outDir)
     val docsDf = spark.read.schema(docsSchema)
       .option("pathGlobFilter", pathGlobFilter).parquet(dir)
@@ -1358,6 +1039,21 @@ object Replay {
     * lake; shares qm4's oracle SQL verbatim across the batch boundary. */
   def qs24StreamPhash(spark: SparkSession, dir: String): DataFrame =
     streamPhashDedup(spark, stagedDocsLake(spark, dir))
+
+  /** The near-dup fold's four append-only state tables — shared by
+    * `streamNearDup` and the composite curation stream (qs26). */
+  private val nearDupStateSchemas: Seq[(String, StructType)] = Seq(
+    "mem" -> StructType(Seq(StructField("txt_md5", StringType),
+      StructField("doc_id", LongType),
+      StructField("rep", LongType))),
+    "reps" -> StructType(Seq(StructField("txt_md5", StringType),
+      StructField("rep", LongType),
+      StructField("sh", ArrayType(StringType)),
+      StructField("bands", ArrayType(LongType)))),
+    "pairs" -> StructType(Seq(StructField("rep_a", LongType),
+      StructField("rep_b", LongType), StructField("jaccard", DoubleType))),
+    "bands" -> StructType(Seq(StructField("rep", LongType),
+      StructField("band_idx", IntegerType), StructField("band_hash", LongType))))
 
   /** Streaming incremental NEAR-duplicate detection — the arrival-time
     * form of qs1_minhash_neardup: documents stream in, each micro-batch
@@ -1392,34 +1088,9 @@ object Replay {
     * Each pair is emitted exactly once — in the batch where its later
     * member arrives. Per-batch writes are O(batch); every `compactEvery`
     * batches the per-batch parquet files are compacted into a fresh
-    * generation dir and the superseded generation is deleted.
-    *
-    * Restart contract: the dedup state lives NEXT TO the streaming
-    * checkpoint under one `work` dir and the two reload TOGETHER — pass
-    * `workDir` and a restarted invocation resumes where the crash left
-    * off: the checkpoint skips already-ingested files, `AppendOnlyState`
-    * reconstructs its generation clock from the directory layout, and a
-    * batch replayed from the at-least-once window (crash between the
-    * state append and the checkpoint commit) overwrites its own
-    * batch-keyed state/output subdirs instead of appending twice. Emitted
+    * generation dir and the superseded generation is deleted. Emitted
     * pairs accumulate under batch-keyed subdirs across restarts, so the
-    * final read returns the COMPLETE pair set. The default (no `workDir`)
-    * is a fresh temp dir per invocation, cleaned at JVM exit. */
-  /** The near-dup fold's four append-only state tables — shared by
-    * `streamNearDup` and the composite curation stream (qs26). */
-  private val nearDupStateSchemas: Seq[(String, StructType)] = Seq(
-    "mem" -> StructType(Seq(StructField("txt_md5", StringType),
-      StructField("doc_id", LongType),
-      StructField("rep", LongType))),
-    "reps" -> StructType(Seq(StructField("txt_md5", StringType),
-      StructField("rep", LongType),
-      StructField("sh", ArrayType(StringType)),
-      StructField("bands", ArrayType(LongType)))),
-    "pairs" -> StructType(Seq(StructField("rep_a", LongType),
-      StructField("rep_b", LongType), StructField("jaccard", DoubleType))),
-    "bands" -> StructType(Seq(StructField("rep", LongType),
-      StructField("band_idx", IntegerType), StructField("band_hash", LongType))))
-
+    * final read returns the COMPLETE pair set. */
   def streamNearDup(spark: SparkSession, dir: String,
                     threshold: Double = 0.8,
                     maxFilesPerTrigger: Int = 1,
@@ -1427,35 +1098,14 @@ object Replay {
                     compactEvery: Int = 16,
                     workDir: Option[String] = None,
                     precomputedSigs: Option[DataFrame] = None): DataFrame = {
-    import graft.dedup.MinHashLSH
-    val work = resolveWork(workDir, "graft_sneardup")
-    val outDir = s"$work/pairs_out"
-    val state = new AppendOnlyState(work, nearDupStateSchemas, compactEvery)
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_sneardup"),
+      nearDupStateSchemas, compactEvery)
+    val outDir = s"${state.work}/pairs_out"
     bandRowsPerBatch.clear()
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        // a replayed batch that compaction already folded in cannot be
-        // excluded from state reads — and its writes all completed
-        // (compaction runs inside its endBatch) — so skip it wholesale
-        if (state.alreadyFolded(batchId)) { maybePoison(batchId) }
-        else {
-          val (deltas, emitWrite) = nearDupBatchDelta(state, ss, batch,
-            batchId, threshold, precomputedSigs, outDir)
-          state.endBatchWork(ss, batchId, Seq(emitWrite),
-            deltas.map { case (t, df) => (t, () => df) }: _*)
-          maybePoison(batchId)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
+        state) { (batch, batchId) =>
+      nearDupBatchDelta(state, batch, batchId, threshold, precomputedSigs, outDir)
+    }
     nearDupEmissions(spark, outDir)
   }
 
@@ -1465,17 +1115,15 @@ object Replay {
     * possibly-crashed writes), plans the batch's pair-emission write to
     * `outDir/b$batchId` (batch-keyed overwrite — replay-idempotent),
     * and returns the four deltas PLUS the emission write (as side work)
-    * for the caller's single
-    * `state.endBatchWork`. Factored so composite streams (qs26) can fold
-    * several gates' states in ONE pass over each batch with ONE
+    * for the caller's single commit. Factored so composite streams (qs26)
+    * can fold several gates' states in ONE pass over each batch with ONE
     * atomic-enough commit point, instead of one stream per gate. */
-  private def nearDupBatchDelta(state: AppendOnlyState,
-                                ss: SparkSession, batch: DataFrame,
+  private def nearDupBatchDelta(state: AppendOnlyState, batch: DataFrame,
                                 batchId: Long, threshold: Double,
                                 precomputedSigs: Option[DataFrame],
-                                outDir: String)
-      : (Seq[(String, DataFrame)], (String, () => Unit)) = {
+                                outDir: String): Delta = {
         import graft.dedup.MinHashLSH
+        val ss = batch.sparkSession
         // (1) batch kernel; empty shingle sets never band or pair (0/0
         // Jaccard — same exclusion as the batch pipeline and the oracle).
         // When the stream's source IS a lake whose signature table is
@@ -1591,12 +1239,12 @@ object Replay {
         // isEmpty guard). coalesce(4): the emission stage's partitions
         // are post-shuffle slices of an O(batch) frame — 4 files per
         // batch, the AppendOnlyState compaction convention. Returned as
-        // SIDE WORK for the caller's endBatchWork rather than run here:
+        // SIDE WORK for the caller's commit rather than run here:
         // its inputs are the checkpointed blocks plus listing-snapshotted
         // state reads (which can never observe this batch's appends), so
         // it overlaps the state appends on the same pool instead of
         // paying its ~10 AQE/broadcast stage jobs serially before them —
-        // and endBatchWork awaits it before compaction can delete the
+        // and the commit awaits it before compaction can delete the
         // generation its snapshot points at.
         val emitWrite = "neardup: emit write" -> (() =>
           emitted.coalesce(4).write.mode("overwrite").parquet(s"$outDir/b$batchId"))
@@ -1610,9 +1258,9 @@ object Replay {
         // compaction's 4-file convention costs no parallel compute —
         // unlike a blanket coalesce inside endBatch, which would squeeze
         // kernel-bearing append plans (see AppendOnlyState.endBatch)
-        (Seq("mem" -> newMem.coalesce(4), "reps" -> novelReps.coalesce(4),
-          "pairs" -> newRepPairs.coalesce(4), "bands" -> newBands.coalesce(4)),
-          emitWrite)
+        Delta("mem" -> newMem.coalesce(4), "reps" -> novelReps.coalesce(4),
+          "pairs" -> newRepPairs.coalesce(4), "bands" -> newBands.coalesce(4))
+          .copy(side = Seq(emitWrite))
   }
 
   /** The accumulated pair emissions of a near-dup stream run. The

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.operators.VectorOps.{cosine, dot}
 import graft.similarity.{Ann, SemDedup}
+import graft.streaming.StreamFold.Delta
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming incremental SEMANTIC dedup — the arrival-time form of
@@ -55,13 +53,9 @@ import org.apache.spark.sql.types._
   * final labels independent of arrival order even when a group's
   * first-arriving member (the state rep) is not its minimum.
   *
-  * Restart contract: same as streamNearDup — state lives next to the
-  * stream checkpoint under one `work` dir and the two reload together:
-  * pass `workDir` and a restarted invocation resumes from the crash
-  * point (checkpoint skips ingested files, AppendOnlyState reconstructs
-  * its clock from the layout, a replayed batch overwrites its own
-  * batch-keyed subdirs). The caller must re-freeze the SAME quantizer
-  * (`cents`, `s`) across restarts — it is model state, trained offline. */
+  * A restarted stream (`StreamFold`'s restart contract) needs the caller
+  * to re-freeze the SAME quantizer (`cents`, `s`) — it is model state,
+  * trained offline. */
 object SemDedupStream {
 
   /** Per-batch novel-assignment row counts of the most recent run — spec
@@ -86,13 +80,6 @@ object SemDedupStream {
                      maxFilesPerTrigger: Int = 1,
                      compactEvery: Int = 16,
                      workDir: Option[String] = None): DataFrame = {
-    val work = workDir match {
-      case Some(w) =>
-        Files.createDirectories(java.nio.file.Paths.get(w)); w
-      case None =>
-        val t = Files.createTempDirectory("graft_ssemdedup").toString
-        Replay.cleanupAtExit(t); t
-    }
     val memSchema = StructType(Seq(StructField("k1", LongType),
       StructField("k2", LongType), StructField("vec_id", LongType)))
     val repsSchema = StructType(Seq(StructField("k1", LongType),
@@ -101,81 +88,67 @@ object SemDedupStream {
       StructField("v", ArrayType(DoubleType))))
     val pairsSchema = StructType(Seq(StructField("rep_a", LongType),
       StructField("rep_b", LongType)))
-    val state = new AppendOnlyState(work,
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_ssemdedup"),
       Seq(("mem", memSchema), ("reps", repsSchema), ("pairs", pairsSchema)),
       compactEvery)
     probeRowsPerBatch.clear()
-    val q = spark.readStream.schema(embStreamSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        // folded replay: all its writes completed; skip (see streamNearDup)
-        if (state.alreadyFolded(batchId)) { Replay.maybePoison(batchId) }
-        else {
-        // exclude this batch's own (possibly crashed) writes so a replay
-        // computes from exactly the state the original attempt saw —
-        // novelty-derived appends would otherwise recompute empty and
-        // overwrite the real rows away
-        val prevReps = state.read(ss, "reps", excludeBatch = Some(batchId))
-        // (1) digest + within-batch collapse (first-arrival minimum is the
-        // candidate rep; the final resolution re-minimizes over members, so
-        // arrival order cannot leak into the answer)
-        val bKeyed = batch.select(col("vec_id"), col("embedding"),
-          xxhash64(lit(1), col("embedding")).as("k1"),
-          xxhash64(lit(2), col("embedding")).as("k2"))
-        val newMem = bKeyed.select(col("k1"), col("k2"), col("vec_id"))
-        val bGroups = bKeyed.groupBy("k1", "k2")
-          .agg(min("vec_id").as("rep"), first("embedding").as("embedding"))
-        // (2) novel digests only — everything already in state is a pure
-        // member append
-        val novel = bGroups
-          .join(prevReps.select("k1", "k2"), Seq("k1", "k2"), "left_anti")
-          .localCheckpoint(true)
-        val norm2 = dot(col("embedding"), col("embedding"))
-        val live = novel.filter(norm2 =!= 0 && !isnan(norm2))
-          .select(col("k1"), col("k2"), col("rep").as("vec_id"),
-            lit(0).as("label"), col("embedding"))
-        val degenerate = novel.filter(!(norm2 =!= 0 && !isnan(norm2)))
-          .select(col("k1"), col("k2"), col("rep"),
-            lit(null).cast("int").as("cell"), lit(null).cast("long").as("sub"),
-            col("embedding").as("v"))
-        val newAssigned = Ann.assignments(live, cents)
-          .withColumn("sub", SemDedup.signBucket(col("v"), s))
-          .join(live.select(col("k1"), col("k2"), col("vec_id")), "vec_id")
-          .select(col("k1"), col("k2"), col("vec_id").as("rep"),
-            col("cell"), col("sub"), col("v"))
-          .localCheckpoint(true)
-        if (recordProbeRows) probeRowsPerBatch += newAssigned.count()
-        // probe: new rows BROADCAST against the accumulated index ∪ the
-        // batch itself; each unordered pair lands exactly once per side
-        // ordering, distinct() folds the two
-        val after = prevReps.filter(col("cell").isNotNull).unionByName(newAssigned)
-        val sim = round(cosine(col("a.v"), col("b.v")), 6)
-        val newPairs = broadcast(newAssigned).as("a")
-          .join(after.as("b"),
-            col("a.cell") === col("b.cell") && col("a.sub") === col("b.sub") &&
-            col("a.rep") =!= col("b.rep"))
-          .filter(!isnan(sim) && sim >= threshold)
-          .select(least(col("a.rep"), col("b.rep")).as("rep_a"),
-            greatest(col("a.rep"), col("b.rep")).as("rep_b"))
-          .distinct()
-        // newPairs has exactly ONE consumer (the state append below) and
-        // its state reads are listing-snapshotted, so it needs no eager
-        // checkpoint — one less job per micro-batch
-        // (3) O(batch) appends, idempotent on the batch id
-        state.endBatch(ss, batchId, "mem" -> newMem,
-          "reps" -> newAssigned.unionByName(degenerate),
-          "pairs" -> newPairs)
-        Replay.maybePoison(batchId)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    StreamFold.fold(StreamFold.parquet(spark, embStreamSchema, stagedDir,
+        maxFilesPerTrigger), state) { (batch, batchId) =>
+      val ss = batch.sparkSession
+      // exclude this batch's own (possibly crashed) writes so a replay
+      // computes from exactly the state the original attempt saw —
+      // novelty-derived appends would otherwise recompute empty and
+      // overwrite the real rows away
+      val prevReps = state.read(ss, "reps", excludeBatch = Some(batchId))
+      // (1) digest + within-batch collapse (first-arrival minimum is the
+      // candidate rep; the final resolution re-minimizes over members, so
+      // arrival order cannot leak into the answer)
+      val bKeyed = batch.select(col("vec_id"), col("embedding"),
+        xxhash64(lit(1), col("embedding")).as("k1"),
+        xxhash64(lit(2), col("embedding")).as("k2"))
+      val newMem = bKeyed.select(col("k1"), col("k2"), col("vec_id"))
+      val bGroups = bKeyed.groupBy("k1", "k2")
+        .agg(min("vec_id").as("rep"), first("embedding").as("embedding"))
+      // (2) novel digests only — everything already in state is a pure
+      // member append
+      val novel = bGroups
+        .join(prevReps.select("k1", "k2"), Seq("k1", "k2"), "left_anti")
+        .localCheckpoint(true)
+      val norm2 = dot(col("embedding"), col("embedding"))
+      val live = novel.filter(norm2 =!= 0 && !isnan(norm2))
+        .select(col("k1"), col("k2"), col("rep").as("vec_id"),
+          lit(0).as("label"), col("embedding"))
+      val degenerate = novel.filter(!(norm2 =!= 0 && !isnan(norm2)))
+        .select(col("k1"), col("k2"), col("rep"),
+          lit(null).cast("int").as("cell"), lit(null).cast("long").as("sub"),
+          col("embedding").as("v"))
+      val newAssigned = Ann.assignments(live, cents)
+        .withColumn("sub", SemDedup.signBucket(col("v"), s))
+        .join(live.select(col("k1"), col("k2"), col("vec_id")), "vec_id")
+        .select(col("k1"), col("k2"), col("vec_id").as("rep"),
+          col("cell"), col("sub"), col("v"))
+        .localCheckpoint(true)
+      if (recordProbeRows) probeRowsPerBatch += newAssigned.count()
+      // probe: new rows BROADCAST against the accumulated index ∪ the
+      // batch itself; each unordered pair lands exactly once per side
+      // ordering, distinct() folds the two
+      val after = prevReps.filter(col("cell").isNotNull).unionByName(newAssigned)
+      val sim = round(cosine(col("a.v"), col("b.v")), 6)
+      val newPairs = broadcast(newAssigned).as("a")
+        .join(after.as("b"),
+          col("a.cell") === col("b.cell") && col("a.sub") === col("b.sub") &&
+          col("a.rep") =!= col("b.rep"))
+        .filter(!isnan(sim) && sim >= threshold)
+        .select(least(col("a.rep"), col("b.rep")).as("rep_a"),
+          greatest(col("a.rep"), col("b.rep")).as("rep_b"))
+        .distinct()
+      // newPairs has exactly ONE consumer (the state append below) and
+      // its state reads are listing-snapshotted, so it needs no eager
+      // checkpoint — one less job per micro-batch
+      // (3) O(batch) appends, idempotent on the batch id
+      Delta("mem" -> newMem, "reps" -> newAssigned.unionByName(degenerate),
+        "pairs" -> newPairs)
+    }
 
     if (!state.nonEmpty) {
       import spark.implicits._
@@ -213,18 +186,15 @@ object SemDedupStream {
   def qs15StreamSemDedup(spark: SparkSession, dir: String,
                          files: Int = 2): DataFrame = {
     val u = SemDedup.plantedUnion(spark, dir).localCheckpoint(true)
-    // staging is INPUT scaffolding, memoized per source-corpus contents
-    // like the qs10/qs16 lakes (Replay.stagedLakes' contract); the frozen
-    // quantizer below and the stream itself still run in full per pass
-    val staged = Replay.stagedLakes.computeIfAbsent(
-      s"planted|$files|${graft.Tables.contentKey(s"$dir/embeddings.parquet")}", _ => {
-        val t = Files.createTempDirectory("graft_semdedup_lake").toString
-        Replay.cleanupAtExit(t)
-        u.select(col("vec_id"), col("embedding"))
-          .repartitionByRange(files, col("vec_id"))
-          .write.mode("overwrite").parquet(t)
-        t
-      })
+    // the frozen quantizer below and the stream itself still run in full
+    // per pass; only the staging is memoized (`StreamFold.stage`)
+    val staged = StreamFold.stage(
+        s"planted|$files|${graft.Tables.contentKey(s"$dir/embeddings.parquet")}",
+        "graft_semdedup_lake") { t =>
+      u.select(col("vec_id"), col("embedding"))
+        .repartitionByRange(files, col("vec_id"))
+        .write.mode("overwrite").parquet(t)
+    }
     // frozen quantizer: trained once over the full lake before the stream
     val cents = Ann.localCentroids(u)
     val s = SemDedup.subBits(u.count())

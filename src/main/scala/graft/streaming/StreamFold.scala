@@ -1,0 +1,105 @@
+package graft.streaming
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
+
+/** The one micro-batch loop behind every arrival-time operator: the
+  * reference's per-PUT Lambda trigger as a `Trigger.AvailableNow` replay
+  * of a file-source stream, checkpointed under the stream's work dir.
+  * Per-stream code supplies only its source frame and its per-batch
+  * delta.
+  *
+  * Restart contract (shared by every stream folded here): a stream's
+  * state lives NEXT TO its streaming checkpoint under one `work` dir and
+  * the two reload together — already-ingested files are skipped AND their
+  * state is still there (`AppendOnlyState` reconstructs its generation
+  * clock from the layout). A batch replayed from the at-least-once window
+  * (a crash between the state append and the checkpoint commit) recomputes
+  * the same delta from the same input batch and OVERWRITES its own
+  * batch-keyed subdirs instead of appending twice; a batch already folded
+  * by compaction is skipped wholesale (its writes all completed —
+  * compaction runs inside its commit). Pass `workDir` for the
+  * durable/restartable form; the default is a fresh temp dir per
+  * invocation (one-shot, cleaned at JVM exit). The restart specs
+  * kill every stream inside that window (`Replay.poisonAfterBatch`). */
+private[graft] object StreamFold {
+
+  /** The caller's durable work dir, or a fresh temp dir cleaned at JVM
+    * exit (the one-shot form). */
+  def work(workDir: Option[String], prefix: String): String =
+    workDir match {
+      case Some(w) => Files.createDirectories(Paths.get(w)); w
+      case None =>
+        val t = Files.createTempDirectory(prefix).toString
+        Replay.cleanupAtExit(t); t
+    }
+
+  /** A parquet lake as a stream source, `maxFilesPerTrigger` files per
+    * micro-batch. */
+  def parquet(spark: SparkSession, schema: StructType, dir: String,
+              maxFilesPerTrigger: Int,
+              pathGlobFilter: Option[String] = None): DataFrame = {
+    val reader = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+    pathGlobFilter.foreach(g => reader.option("pathGlobFilter", g))
+    reader.parquet(dir)
+  }
+
+  /** Stream INPUT scaffolding (a lake restaged as range files so the
+    * oracle-checked run crosses a batch boundary), not computed state:
+    * memoized per `key` — the source contents — so a bench suite stages
+    * each lake once across passes; the streams over it still run in full
+    * on every invocation. */
+  private val stagedLakes =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  def stage(key: String, prefix: String)(write: String => Unit): String =
+    stagedLakes.computeIfAbsent(key, _ => {
+      val t = Files.createTempDirectory(prefix).toString
+      Replay.cleanupAtExit(t)
+      write(t)
+      t
+    })
+
+  /** The raw loop: drains `source`'s backlog, running `body` on each
+    * micro-batch, then returns. Stateless writers call it directly. */
+  def run(source: DataFrame, work: String)(body: (DataFrame, Long) => Unit): Unit =
+    source.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", s"$work/ckpt")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        body(batch, batchId)
+        Replay.maybePoison(batchId)
+      }
+      .start()
+      .awaitTermination()
+
+  /** One micro-batch's commit: `appends` are call-by-need (a thunk may
+    * block on a driver-side future so the other tables' writes start at
+    * once), `side` writes ride the same pool (`AppendOnlyState.
+    * endBatchWork`), and `release` runs after the commit returns or
+    * throws. */
+  final case class Delta(appends: Seq[(String, () => DataFrame)],
+                         side: Seq[(String, () => Unit)] = Nil,
+                         release: () => Unit = () => ())
+  object Delta {
+    def apply(appends: (String, DataFrame)*): Delta =
+      Delta(appends.map { case (t, df) => (t, () => df) })
+  }
+
+  /** The stateful form: `delta` computes each micro-batch's appends to
+    * `state`, committed in one `endBatchWork`. A replayed batch that
+    * compaction already folded in is skipped before `delta` runs — its
+    * rows can no longer be excluded from the state reads. */
+  private[streaming] def fold(source: DataFrame, state: AppendOnlyState)(
+      delta: (DataFrame, Long) => Delta): Unit =
+    run(source, state.work) { (batch, batchId) =>
+      if (!state.alreadyFolded(batchId)) {
+        val d = delta(batch, batchId)
+        try state.endBatchWork(batch.sparkSession, batchId, d.side, d.appends: _*)
+        finally d.release()
+      }
+    }
+}

@@ -134,12 +134,15 @@ class DomainPipelineSpec extends AnyFunSuite {
   }
 
   test("streaming post ingest equals the batch snapshot (§3.1)") {
+    // the ingest envelope too: both readers share one `withEnvelope`
+    val compared = Seq("id", "like_count", "followers", "media_url",
+      "objectKey", "content_type", "content_length")
     val streamed = graft.ingest.PostIngest
       .streamSnapshot(spark, s"$fixtures/posts/*", maxFilesPerTrigger = 2)
-      .select("id", "like_count", "followers", "media_url")
+      .select(compared.map(col): _*)
       .orderBy("id").collect().map(_.toSeq).toSeq
     val batch = snapshot
-      .select("id", "like_count", "followers", "media_url")
+      .select(compared.map(col): _*)
       .orderBy("id").collect().map(_.toSeq).toSeq
     assert(streamed == batch)
   }

@@ -906,6 +906,25 @@ class RestartSpec extends AnyFunSuite {
     assert(s.read(spark, "t").count() == 3)
   }
 
+  test("AppendOnlyState endBatchWork waits for every write before rethrowing a failure") {
+    val w = work("graft_restart_failfast")
+    val sch = StructType(Seq(StructField("id", LongType)))
+    val s = new AppendOnlyState(w, Seq(("t", sch)), compactEvery = 100)
+    // the append throws at once while a sibling side write is still
+    // running; the failure may only surface after that sibling finished
+    val marker = new java.io.File(work("graft_restart_failfast_out"), "marker")
+    val slow = "test: slow side" -> (() => {
+      Thread.sleep(1500)
+      Files.write(marker.toPath, Array[Byte](1)); ()
+    })
+    val died = intercept[IllegalStateException] {
+      s.endBatchWork(spark, 0L, Seq(slow),
+        "t" -> (() => throw new IllegalStateException("append failed")))
+    }
+    assert(died.getMessage == "append failed")
+    assert(marker.exists, "endBatchWork rethrew while a sibling write was still running")
+  }
+
   test("AppendOnlyState read() snapshots the file listing at call time") {
     import spark.implicits._
     val w = work("graft_restart_snap")
