@@ -640,10 +640,11 @@ object Replay {
     * norms of matched docs — the norm computed inside the arrival
     * batch over ALL the doc's buckets, then only matched docs kept).
     * Every fact is append-only and O(matched batch docs) + O(1); the
-    * report rebuilds both rankings from state with the SAME factored
-    * tails the batch form uses (bm25From / denseRanked / rrfFuse), so
-    * the fused ranking folds to exactly qd40 across any batch boundary
-    * and the oracle SQL is shared verbatim. */
+    * report rebuilds both rankings from state with `bm25From` (the
+    * batch form's idf, term score and ranking over long-form postings)
+    * and the batch form's own denseRanked / rrfFuse, so the fused
+    * ranking folds to exactly qd40 across any batch boundary and the
+    * oracle SQL is shared verbatim. */
   def streamHybridRrf(spark: SparkSession, dir: String,
                       queryTerms: Seq[String] = Seq("spark", "query", "window"),
                       candK: Int = graft.text.Search.HybridCandK,

@@ -14,78 +14,111 @@ import org.apache.spark.sql.functions._
   *   score(d, Q) = Σ_t idf(t) · tf(t,d)·(k1+1) / (tf(t,d) + k1·(1−b+b·|d|/avgdl))
   *   idf(t) = ln( (N − df(t) + 0.5) / (df(t) + 0.5) + 1 )
   *
-  * Plan shape: one explode+groupBy pass builds (doc, term, tf) postings
-  * and per-doc lengths; df/idf come from a term-level aggregate of the
-  * postings restricted to the (broadcast) query terms, so the heavy
-  * per-document side is scanned once and only query-term postings flow
-  * into scoring. Scores are rounded to 6 decimals BEFORE ranking so
-  * ordering is stable across engines (the per-doc term sum is a ≤|Q|
-  * element float sum).
+  * Plan shape: one fused pass over the `documents` rows. Each row is
+  * tokenized once, and the same projection yields its length `dl` and
+  * one `tf_i` per distinct query term. One aggregate row then carries
+  * N, avgdl and every df_i; it is broadcast into the scoring projection,
+  * which keeps only rows matching at least one term. The top k is an
+  * orderBy().limit() (TakeOrderedAndProject). The corpus is read twice,
+  * once for the statistics and once for scoring, and nothing
+  * corpus-sized is shuffled: no token rows, no postings, no join on
+  * doc_id. Scores are rounded to 6 decimals BEFORE ranking so ordering
+  * is stable across engines (the per-doc term sum is a ≤|Q| element
+  * float sum). Ties are broken by doc_id.
+  *
+  * `doc_id` is the key of `documents`: every row is its own document.
+  * A row with a null doc_id counts toward N and avgdl but never toward
+  * df or the ranking; a row with null text counts toward N only. A
+  * query term given m times multiplies its tf by m. An empty query
+  * returns an empty frame with the usual four columns.
   */
 object Search {
   val K1 = 1.2
   val B = 0.75
 
   def bm25(spark: SparkSession, dir: String, queryTerms: Seq[String],
-           topK: Int = 10): DataFrame = {
-    import spark.implicits._
-    val docs = Tables(spark, dir, "documents")
-    val query = queryTerms.toDF("term")
-    // restrict to query terms BELOW the tf aggregate (guide §2.3:
-    // aggregate/filter before you shuffle): per-(doc, term) counts are
-    // independent, so filtering first computes the identical qPostings
-    // while the exchange carries only query-term pairs instead of every
-    // distinct (doc_id, term) pair in the corpus — Catalyst cannot push
-    // a join through an aggregate on its own
-    val qPostings = docs
-      .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("term"))
-      .join(broadcast(query), "term")
-      .groupBy("doc_id", "term")
-      .agg(count(lit(1)).as("tf"))
-    val docLen = docs.select(col("doc_id"),
-      size(split(trim(col("text")), "\\s+")).cast("double").as("dl"))
-    // corpus statistics (N, avgdl) as ONE broadcast scalar row joined
-    // into the plan — the earlier docs.count() + docLen.agg().collect()
-    // pair were two extra driver actions, i.e. two additional full
-    // corpus scans before the real job even started
-    val stats = docLen.agg(
-      count(lit(1)).cast("double").as("n"), avg("dl").as("avgdl"))
-    bm25From(qPostings, docLen, stats, topK)
+           topK: Int = 10): DataFrame =
+    bm25(Tables(spark, dir, "documents"), queryTerms, topK)
+
+  /** The fused BM25 operator over already-loaded `documents` rows
+    * (doc_id, text); see the object doc for its plan and edge cases. */
+  private[graft] def bm25(docs: DataFrame, queryTerms: Seq[String],
+                          topK: Int): DataFrame = {
+    // one (tf, df) column pair per DISTINCT term; a term given m times
+    // multiplies its tf by m, as bm25BatchDeltas' join on the raw term
+    // list does, so the batch and streaming forms rank alike
+    val terms = queryTerms.distinct.zipWithIndex.map { case (t, i) =>
+      (t, queryTerms.count(_ == t), s"tf_$i", s"df_$i")
+    }
+    val rows = docs
+      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
+      .select(col("doc_id") +: size(col("toks")).cast("double").as("dl") +:
+        terms.map { case (t, m, tf, _) =>
+          (size(filter(col("toks"), _ === t)) * m).as(tf) }: _*)
+    val stats = rows.agg(count(lit(1)).cast("double").as("n"),
+      avg("dl").as("avgdl") +: terms.map { case (_, _, tf, df) =>
+        count(when(col(tf) > 0, col("doc_id"))).cast("double").as(df) }: _*)
+    val matched = terms.map { case (_, _, tf, _) => col(tf) > 0 }
+    val score = terms.map { case (_, _, tf, df) =>
+      when(col(tf) > 0,
+        termScore(idf(col("n"), col(df)), col(tf), col("dl"), col("avgdl")))
+        .otherwise(0.0)
+    }
+    // foldLeft, not reduce: an empty query filters on lit(false), which
+    // Catalyst prunes to an empty relation with the same four columns
+    ranked(rows
+      .filter(col("doc_id").isNotNull && matched.foldLeft(lit(false))(_ || _))
+      .crossJoin(broadcast(stats))
+      .select(col("doc_id"),
+        round(score.foldLeft(lit(0.0))(_ + _), 6).as("score"),
+        matched.map(_.cast("long")).foldLeft(lit(0L))(_ + _).as("n_terms_matched")),
+      topK)
   }
 
-  /** The BM25 scoring tail over pre-built inputs — shared by the batch
-    * form above (which derives them from one corpus scan) and the
-    * streaming form (`streaming.Replay.streamBm25`, which folds them
-    * from per-batch deltas). `qPostings` is (doc_id, term, tf) already
-    * restricted to the query terms; `docLen` is (doc_id, dl) covering
-    * at least every posting doc; `stats` is one row (n, avgdl) over the
-    * FULL corpus. */
-  def bm25From(qPostings: DataFrame, docLen: DataFrame, stats: DataFrame,
-               topK: Int): DataFrame = {
-    val idf = qPostings.groupBy("term")
-      .agg(countDistinct("doc_id").cast("double").as("df"))
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
+  /** idf(t) from the corpus size `n` and the term's document frequency. */
+  private def idf(n: Column, df: Column): Column =
+    log((n - df + 0.5) / (df + 0.5) + 1.0)
 
-    val scored = qPostings
-      .join(broadcast(idf.select("term", "idf", "avgdl")), "term")
-      .join(docLen, "doc_id")
-      .withColumn("term_score",
-        // 2.2/0.25 as literals, not K1+1.0 etc: compile-time double folds
-        // can differ from the parsed literal by 1 ULP and break parity
-        col("idf") * (col("tf") * lit(2.2)) /
-          (col("tf") + lit(K1) * (lit(0.25) + lit(B) * col("dl") / col("avgdl"))))
-      .groupBy("doc_id")
-      .agg(round(sum("term_score"), 6).as("score"),
-        count(lit(1)).as("n_terms_matched"))
-    // orderBy().limit() compiles to TakeOrderedAndProject (distributed
-    // partial top-k, no global sort); the rank window then runs over ≤K
-    // rows — never a single-partition window across the corpus
+  /** One term's BM25 contribution to a document's score. */
+  private def termScore(idf: Column, tf: Column, dl: Column,
+                        avgdl: Column): Column =
+    // 2.2/0.25 as literals, not K1+1.0 etc: compile-time double folds
+    // can differ from the parsed literal by 1 ULP and break parity
+    idf * (tf * lit(2.2)) / (tf + lit(K1) * (lit(0.25) + lit(B) * dl / avgdl))
+
+  /** The top `topK` of (doc_id, score, n_terms_matched), ranked 1..K by
+    * score with doc_id tie-breaks. orderBy().limit() compiles to
+    * TakeOrderedAndProject (distributed partial top-k, no global sort);
+    * the rank window then runs over ≤K rows — never a single-partition
+    * window across the corpus. */
+  private def ranked(scored: DataFrame, topK: Int): DataFrame =
     scored.orderBy(col("score").desc, col("doc_id")).limit(topK)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
       .select("rank", "doc_id", "score", "n_terms_matched")
       .orderBy("rank")
+
+  /** The BM25 scoring tail over long-form postings: the streaming form
+    * (`streaming.Replay.streamBm25`) folds these inputs from per-batch
+    * deltas. `qPostings` is (doc_id, term, tf) already restricted to the
+    * query terms; `docLen` is (doc_id, dl) covering at least every
+    * posting doc; `stats` is one row (n, avgdl) over the FULL corpus.
+    * Same idf, term score and ranking as `bm25`. */
+  def bm25From(qPostings: DataFrame, docLen: DataFrame, stats: DataFrame,
+               topK: Int): DataFrame = {
+    val idfs = qPostings.groupBy("term")
+      .agg(countDistinct("doc_id").cast("double").as("df"))
+      .crossJoin(broadcast(stats))
+      .withColumn("idf", idf(col("n"), col("df")))
+    ranked(qPostings
+      .join(broadcast(idfs.select("term", "idf", "avgdl")), "term")
+      .join(docLen, "doc_id")
+      .withColumn("term_score",
+        termScore(col("idf"), col("tf"), col("dl"), col("avgdl")))
+      .groupBy("doc_id")
+      .agg(round(sum("term_score"), 6).as("score"),
+        count(lit(1)).as("n_terms_matched")),
+      topK)
   }
 
   /** Query entry: a fixed three-term query over the corpus. */
@@ -145,7 +178,7 @@ object Search {
       val fSparse = pool.submit(new java.util.concurrent.Callable[DataFrame] {
         def call(): DataFrame = {
           spark.sparkContext.setJobDescription("hybrid: sparse candidates")
-          try bm25(spark, dir, queryTerms, candK)
+          try bm25(docs, queryTerms, candK)
             .select(col("doc_id"), col("rank").as("sparse_rank"))
             .localCheckpoint(true)
           finally spark.sparkContext.setJobDescription(null)

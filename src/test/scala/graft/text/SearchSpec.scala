@@ -1,10 +1,127 @@
 package graft.text
 
 import graft.SparkTestSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class SearchSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
+
+  /** The long-form plan the fused `bm25` replaced: explode every token,
+    * join the raw query terms, count per (doc, term), then score with
+    * `bm25From` over a separate doc-length scan and stats row. */
+  private def longFormBm25(docs: DataFrame, queryTerms: Seq[String],
+                           topK: Int): DataFrame = {
+    import spark.implicits._
+    val qPostings = docs
+      .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("term"))
+      .join(broadcast(queryTerms.toDF("term")), "term")
+      .groupBy("doc_id", "term")
+      .agg(count(lit(1)).as("tf"))
+    val docLen = docs.select(col("doc_id"),
+      size(split(trim(col("text")), "\\s+")).cast("double").as("dl"))
+    val stats = docLen.agg(
+      count(lit(1)).cast("double").as("n"), avg("dl").as("avgdl"))
+    Search.bm25From(qPostings, docLen, stats, topK)
+  }
+
+  private def assertSameAsLongForm(docs: DataFrame, q: Seq[String],
+                                   topK: Int): Array[Row] = {
+    val fused = Search.bm25(docs, q, topK)
+    val long = longFormBm25(docs, q, topK)
+    assert(fused.schema.map(f => (f.name, f.dataType)) ==
+      long.schema.map(f => (f.name, f.dataType)), s"schema, query $q")
+    val got = fused.collect()
+    assert(got.toSeq == long.collect().toSeq, s"query $q, topK $topK")
+    got
+  }
+
+  /** Hand-made corpus covering the edge cases the bench corpora lack. */
+  private lazy val edgeDocs: DataFrame = {
+    import spark.implicits._
+    Seq[(Option[Long], Option[String])](
+      (Some(1L), Some("a b c")),
+      (Some(2L), Some("a a d")),
+      (Some(3L), Some("b c d e")),
+      (Some(4L), Some("c")),
+      (Some(5L), Some("a b a b a")),
+      (Some(6L), Some("  a   c ")),
+      (None, Some("a a a b")),      // counts toward N and avgdl only
+      (Some(7L), None),             // counts toward N only
+      (Some(8L), Some("a b c")),    // ties doc 1
+      (Some(9L), Some(""))
+    ).toDF("doc_id", "text")
+  }
+
+  test("fused bm25 equals the long-form plan on sf0.001 and on edge cases") {
+    val docs = graft.Tables(spark, SparkTestSession.sfDir, "documents")
+    val qd8 = Seq("spark", "query", "window")
+    assert(assertSameAsLongForm(docs, qd8, 10).length == 10)
+    assertSameAsLongForm(docs, qd8, 100000)
+    for {
+      q <- Seq(Seq("a"), Seq("a", "a"), Seq("b", "a", "b"),
+        Seq("a", "b", "c"), Seq("c", "zzz"), Seq("zzz"), Seq.empty[String])
+      k <- Seq(1, 3, 50)
+    } assertSameAsLongForm(edgeDocs, q, k)
+  }
+
+  test("fused bm25 edge semantics: null keys, null text, repeated terms, ties") {
+    // N = 10 rows; avgdl over the 9 non-null texts ("" splits to one
+    // token); df(a) = 5 (the null-doc_id row is not counted)
+    val n = 10.0
+    val avgdl = (3 + 3 + 4 + 1 + 5 + 2 + 4 + 3 + 1) / 9.0
+    val idfA = math.log((n - 5 + 0.5) / (5 + 0.5) + 1.0)
+    def round6(x: Double): Double = BigDecimal(x)
+      .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
+    def scoreA(tf: Double, dl: Double): Double =
+      round6(idfA * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)))
+
+    val single = assertSameAsLongForm(edgeDocs, Seq("a"), 50)
+    assert(single.map(_.getLong(1)).toSeq == Seq(2L, 5L, 6L, 1L, 8L))
+    def scoreOf(rows: Array[Row], id: Long): Double =
+      rows.find(_.getLong(1) == id).get.getDouble(2)
+    assert(scoreOf(single, 5L) == scoreA(3, 5))
+    // a term given twice doubles its tf, but still counts as one match
+    val doubled = assertSameAsLongForm(edgeDocs, Seq("a", "a"), 50)
+    assert(scoreOf(doubled, 5L) == scoreA(6, 5))
+    assert(scoreOf(doubled, 2L) == scoreA(4, 3))
+    assert(doubled.forall(_.getLong(3) == 1L))
+
+    // docs 1 and 8 tie on every query; doc_id breaks the tie
+    val abc = assertSameAsLongForm(edgeDocs, Seq("a", "b", "c"), 50)
+    val ids = abc.map(_.getLong(1)).toSeq
+    assert(ids.indexOf(1L) + 1 == ids.indexOf(8L))
+    assert(abc(ids.indexOf(1L)).getDouble(2) == abc(ids.indexOf(8L)).getDouble(2))
+    assert(abc.forall(r => !r.isNullAt(1)))
+
+    val empty = Search.bm25(edgeDocs, Seq.empty, 10)
+    assert(empty.columns.toSeq == Seq("rank", "doc_id", "score", "n_terms_matched"))
+    assert(empty.collect().isEmpty)
+  }
+
+  test("bm25 runs at most 4 Spark jobs per query") {
+    val sc = spark.sparkContext
+    def query(): Unit = Search.bm25(spark, SparkTestSession.sfDir,
+      Seq("spark", "query", "window"), topK = 10).collect()
+    query() // warm-up
+    org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+    val group = "SearchSpec-bm25-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "bm25 job count")
+      try query() finally sc.clearJobGroup()
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get > 0 && jobs.get <= 4, s"${jobs.get} jobs")
+  }
 
   test("bm25 ranks corpus docs and matches a hand-computed score") {
     val got = Search.bm25(spark, SparkTestSession.sfDir, Seq("spark"), topK = 5)
@@ -15,7 +132,6 @@ class SearchSpec extends AnyFunSuite {
     val scores = got.map(_.getDouble(2))
     assert(scores.zip(scores.tail).forall { case (a, b) => a >= b })
     // hand-recompute the top doc's score from raw corpus statistics
-    import org.apache.spark.sql.functions._
     val docs = graft.Tables(spark, SparkTestSession.sfDir, "documents")
     val n = docs.count().toDouble
     val toks = docs.select(col("doc_id"),
