@@ -259,6 +259,7 @@ object Bench {
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
           System.err.println(s"[bench] warm-up pass $w $name failed: ${e.getMessage}")
+          SessionMemo.clearAll()
           graft.dedup.MinHashLSH.clearCache()
           graft.similarity.Ann.clearCache()
         }
@@ -276,6 +277,7 @@ object Bench {
         // (qb1_pq_model_build evicts + retrains them inside its timed
         // window each pass), so the PQ queries measure as memo-served
         // searches instead of re-billing training to the first consumer
+        SessionMemo.clearAll()
         graft.dedup.MinHashLSH.clearCache()
         graft.similarity.Ann.clearIndexCache()
         graft.similarity.SemDedup.clearCache()
@@ -305,6 +307,7 @@ object Bench {
             // the boundary release below would then drop checkpoints its
             // unmaterialized partitions still need — drop the memos too
             // so the next consumer rebuilds them from scratch
+            SessionMemo.clearAll()
             graft.dedup.MinHashLSH.clearCache()
             graft.similarity.Ann.clearCache()
             None
@@ -373,6 +376,7 @@ object Bench {
     var settleRound = 0
     while (settleRound < SettleMax && ordered.exists(t => unsettled(t._1))) {
       settleRound += 1
+      SessionMemo.clearAll()
       graft.dedup.MinHashLSH.clearCache()
       // index memo only — codebook memos stay, same policy as inter-pass
       // (qb1's settle runs re-evict them inside their own window anyway)
@@ -390,6 +394,7 @@ object Bench {
           settleLog += s"$name:${f4(sec)}"
         } catch { case e: Throwable =>
           System.err.println(s"[bench] settle $name failed: ${e.getMessage}")
+          SessionMemo.clearAll()
           graft.dedup.MinHashLSH.clearCache()
           graft.similarity.Ann.clearCache()
         }

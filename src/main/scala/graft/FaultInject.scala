@@ -111,6 +111,7 @@ object FaultInject {
             .write.mode("overwrite").parquet(s"$outDir/$name")
           None
         } catch { case e: Throwable =>
+          SessionMemo.clearAll()
           graft.dedup.MinHashLSH.clearCache()
           graft.similarity.Ann.clearCache()
           Some(e.toString.linesIterator.next())

@@ -42,9 +42,7 @@ object Tables {
     * it; treat `contentKey` equality as "same corpus as Spark would see
     * it", not as cryptographic identity. */
   def contentKey(dir: String): String = {
-    val canon =
-      try java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
-      catch { case _: Exception => dir }
+    val canon = canonical(dir)
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
@@ -71,6 +69,12 @@ object Tables {
       s"$canon#$digest"
     }
   }
+
+  /** The absolute, normalized form of a path: the part of its
+    * `contentKey` that stays the same across rewrites. */
+  def canonical(dir: String): String =
+    try java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
+    catch { case _: Exception => dir }
 
   /** Monotonic suffix for `contentKey` on paths java.io cannot list —
     * makes the "unlistable ⇒ unmemoizable" contract deterministic

@@ -21,6 +21,7 @@ object Verify {
         // a partially-materialized session memo must not survive the
         // boundary release below (its remaining partitions would need
         // the checkpoints the release drops)
+        SessionMemo.clearAll()
         graft.dedup.MinHashLSH.clearCache()
         graft.similarity.Ann.clearCache()
       }

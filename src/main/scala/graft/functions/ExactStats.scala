@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.IntegralDivide
 import org.apache.spark.sql.functions._
 
@@ -25,10 +26,13 @@ object ExactStats {
   private val IdivName = "graft_idiv"
 
   /** Integral (floor-for-positives) division as a Column — Spark exposes
-    * no integer-div function API, so register the Catalyst expression. */
+    * no integer-div function API, so register the Catalyst expression,
+    * once per session, as `VectorFunctions.register` does. */
   private def idiv(spark: SparkSession, a: Column, b: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      IdivName, exprs => IntegralDivide(exprs(0), exprs(1)), "scala_udf")
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(IdivName)))
+      registry.createOrReplaceTempFunction(
+        IdivName, exprs => IntegralDivide(exprs(0), exprs(1)), "scala_udf")
     call_function(IdivName, a, b)
   }
 

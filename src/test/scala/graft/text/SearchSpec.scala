@@ -101,11 +101,9 @@ class SearchSpec extends AnyFunSuite {
     assert(empty.collect().isEmpty)
   }
 
-  test("bm25 runs at most 4 Spark jobs per query") {
+  /** Spark jobs `body` runs, counted through a job group. */
+  private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
-    def query(): Unit = Search.bm25(spark, SparkTestSession.sfDir,
-      Seq("spark", "query", "window"), topK = 10).collect()
-    query() // warm-up
     org.apache.spark.GraftTestBridge.drainListenerBus(sc)
     val group = "SearchSpec-bm25-jobs"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -117,10 +115,71 @@ class SearchSpec extends AnyFunSuite {
     sc.addSparkListener(l)
     try {
       sc.setJobGroup(group, "bm25 job count")
-      try query() finally sc.clearJobGroup()
+      try body finally sc.clearJobGroup()
       org.apache.spark.GraftTestBridge.drainListenerBus(sc)
     } finally sc.removeSparkListener(l)
-    assert(jobs.get > 0 && jobs.get <= 4, s"${jobs.get} jobs")
+    jobs.get
+  }
+
+  test("bm25 runs one Spark job per warm query") {
+    // a private copy of the corpus: no cached plan of another case can
+    // stand in for this index's rows
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_jobs").toString
+    try {
+      graft.Tables(spark, SparkTestSession.sfDir, "documents")
+        .write.parquet(s"$dir/documents.parquet")
+      def query(): Unit = Search.bm25(spark, dir,
+        Seq("spark", "query", "window"), topK = 10).collect()
+      // cold: the documents footer read, the materialization of the
+      // persisted rows, the statistics and the dictionary aggregates
+      // (stage + result each), then the query itself
+      val cold = jobsOf(query())
+      assert(cold == 7, s"$cold jobs cold")
+      val warm = jobsOf(query())
+      assert(warm == 1, s"$warm jobs warm")
+    } finally {
+      Search.indexes.clear()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("an in-place corpus rewrite rebuilds the index once and unpersists the old rows") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_memo").toString
+    try {
+      // the rewrite lands from outside the session (write aside, then
+      // swap the directory), so Spark refreshes no cache of the path
+      // itself: the memo alone must notice and drop the old rows
+      def write(docs: Seq[(Long, String)]): Unit = {
+        val staged = s"$dir/staged-${System.nanoTime}"
+        docs.toDF("doc_id", "text").coalesce(1).write.parquet(staged)
+        org.apache.commons.io.FileUtils.deleteDirectory(
+          new java.io.File(s"$dir/documents.parquet"))
+        java.nio.file.Files.move(java.nio.file.Paths.get(staged),
+          java.nio.file.Paths.get(s"$dir/documents.parquet"))
+      }
+      def top(): Seq[Long] = Search.bm25(spark, dir, Seq("a"), topK = 10)
+        .collect().map(_.getLong(1)).toSeq
+      val sc = spark.sparkContext
+      write(Seq(1L -> "a b", 2L -> "a a", 3L -> "b c"))
+      val before = sc.getPersistentRDDs.keySet
+      assert(top() == Seq(2L, 1L))
+      val firstRows = sc.getPersistentRDDs.keySet -- before
+      assert(firstRows.nonEmpty)
+      val builds = Search.indexes.builds.get
+      assert(top() == Seq(2L, 1L))
+      assert(Search.indexes.builds.get == builds, "a warm query rebuilt the index")
+      write(Seq(4L -> "c a", 5L -> "a a a b", 6L -> "b"))
+      assert(top() == Seq(5L, 4L))
+      assert(Search.indexes.builds.get == builds + 1)
+      assert((firstRows & sc.getPersistentRDDs.keySet).isEmpty,
+        "the replaced index's rows are still persisted")
+      assert(top() == Seq(5L, 4L))
+      assert(Search.indexes.builds.get == builds + 1)
+    } finally {
+      Search.indexes.clear()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("bm25 ranks corpus docs and matches a hand-computed score") {

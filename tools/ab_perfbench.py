@@ -10,11 +10,14 @@ which side runs first (parent first on even pair indices, change first on
 odd). The change is the working tree of this checkout, uncommitted edits
 included. Run length is BENCHMARK.json's run_seconds on both sides.
 
-Prints every run's result line as it lands, then per metric: the median
-and quartiles of each side, the relative delta of the medians, the
-parent's interquartile distance relative to its median, and the pairs the
-change won (ties count for neither side); then each side's correct runs
-and failed/attempted operations.
+Prints every run's result line as it lands, with the stolen cores
+(`host.steal_cores`) and the `flagged` mark of that run's record
+(perfbench/work/results/<workload>-s<seed>-t<trace>.json in the side's
+tree), then per metric: the median and quartiles of each side, the
+relative delta of the medians, the parent's interquartile distance
+relative to its median, and the pairs the change won (ties count for
+neither side); then each side's correct runs, failed/attempted
+operations and flagged runs.
 """
 import argparse
 import json
@@ -56,9 +59,24 @@ def run(tree, workload, seed, seconds, trace):
     r = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE, text=True)
     lines = [l for l in r.stdout.splitlines() if l.strip()]
     try:
-        return json.loads(lines[-1]) if r.returncode == 0 else None
+        got = json.loads(lines[-1]) if r.returncode == 0 else None
     except (IndexError, ValueError):
         return None
+    if got is not None:
+        got["host"] = host_of(tree, workload, seed, trace)
+    return got
+
+
+def host_of(tree, workload, seed, trace):
+    """Stolen cores and the flagged mark from the run's record."""
+    record = os.path.join(tree, "perfbench", "work", "results",
+                          f"{workload}-s{seed}-t{trace}.json")
+    try:
+        with open(record) as f:
+            host = json.load(f)["host"]
+        return {"steal_cores": host.get("steal_cores"), "flagged": bool(host.get("flagged"))}
+    except (OSError, ValueError, KeyError):
+        return {"steal_cores": None, "flagged": None}
 
 
 def main():
@@ -88,7 +106,9 @@ def main():
             for side in order:
                 got = run(trees[side], a.workload, seed, spec["run_seconds"], a.trace)
                 results[side].append(got)
-                print(f"[ab] seed {seed} {side}: {json.dumps(got)}", flush=True)
+                host = got["host"] if got else {}
+                print(f"[ab] seed {seed} {side}: steal_cores {host.get('steal_cores')} "
+                      f"flagged {host.get('flagged')}: {json.dumps(got)}", flush=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -113,7 +133,9 @@ def main():
         rs = results[side]
         ok = [r for r in rs if r]
         print(f"{side}: {sum(r['correct'] for r in ok)}/{len(rs)} runs correct, "
-              f"{sum(r['failed'] for r in ok)}/{sum(r['attempted'] for r in ok)} operations failed")
+              f"{sum(r['failed'] for r in ok)}/{sum(r['attempted'] for r in ok)} operations failed, "
+              f"{sum(1 for r in ok if r['host']['flagged'])}/{len(rs)} runs flagged "
+              f"(steal_cores {[r['host']['steal_cores'] for r in ok]})")
 
 
 if __name__ == "__main__":
