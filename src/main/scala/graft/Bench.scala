@@ -260,8 +260,6 @@ object Bench {
         catch { case e: Throwable =>
           System.err.println(s"[bench] warm-up pass $w $name failed: ${e.getMessage}")
           SessionMemo.clearAll()
-          graft.dedup.MinHashLSH.clearCache()
-          graft.similarity.Ann.clearCache()
         }
         graft.plans.ScaleTechniques.releaseLocalCheckpoints(spark)
         spark.streams.resetTerminated()
@@ -270,22 +268,13 @@ object Bench {
     }
     val passes = (1 to Passes).map { p =>
       if (p > 1 || WarmupPasses > 0) {
-        // each pass pays the shared signature/pair-graph kernel (and the
-        // materialized ANN index build) once, via the same (alphabetically
-        // first) consumer as every other pass. Trained CODEBOOK memos are
-        // NOT cleared here: their training cost has its own line item
-        // (qb1_pq_model_build evicts + retrains them inside its timed
-        // window each pass), so the PQ queries measure as memo-served
-        // searches instead of re-billing training to the first consumer
-        SessionMemo.clearAll()
-        graft.dedup.MinHashLSH.clearCache()
-        graft.similarity.Ann.clearIndexCache()
-        graft.similarity.SemDedup.clearCache()
-        // trained-tokenizer memos (BPE merge table, unigram pieces) are
-        // cleared like the signature memo: each pass pays the training
-        // once, via the same first consumer
-        graft.operators.TextOps.clearBpeCache()
-        graft.text.Unigram.clearCache()
+        // each pass pays the pass-scoped memos (signatures, pair graphs,
+        // indexes, tokenizers) once, via the same (alphabetically first)
+        // consumer as every other pass. Per-model memos stay: codebook
+        // training has its own line item (qb1_pq_model_build evicts +
+        // retrains them inside its timed window each pass), so the PQ
+        // queries measure as memo-served searches
+        SessionMemo.clearPass()
         System.gc() // let the ContextCleaner reclaim dropped checkpoints
       }
       val passOrder = shuffleSeed.fold(ordered) { seed =>
@@ -308,8 +297,6 @@ object Bench {
             // unmaterialized partitions still need — drop the memos too
             // so the next consumer rebuilds them from scratch
             SessionMemo.clearAll()
-            graft.dedup.MinHashLSH.clearCache()
-            graft.similarity.Ann.clearCache()
             None
           }
         // free the query's dead localCheckpoint blocks OUTSIDE its timed
@@ -376,14 +363,9 @@ object Bench {
     var settleRound = 0
     while (settleRound < SettleMax && ordered.exists(t => unsettled(t._1))) {
       settleRound += 1
-      SessionMemo.clearAll()
-      graft.dedup.MinHashLSH.clearCache()
-      // index memo only — codebook memos stay, same policy as inter-pass
-      // (qb1's settle runs re-evict them inside their own window anyway)
-      graft.similarity.Ann.clearIndexCache()
-      graft.similarity.SemDedup.clearCache()
-      graft.operators.TextOps.clearBpeCache()
-      graft.text.Unigram.clearCache()
+      // same policy as inter-pass (qb1's settle runs re-evict the
+      // codebooks inside their own window anyway)
+      SessionMemo.clearPass()
       System.gc(); Thread.sleep(200); System.gc()
       ordered.filter(t => unsettled(t._1)).foreach { case (name, fn) =>
         val t0 = System.nanoTime()
@@ -395,8 +377,6 @@ object Bench {
         } catch { case e: Throwable =>
           System.err.println(s"[bench] settle $name failed: ${e.getMessage}")
           SessionMemo.clearAll()
-          graft.dedup.MinHashLSH.clearCache()
-          graft.similarity.Ann.clearCache()
         }
         graft.plans.ScaleTechniques.releaseLocalCheckpoints(spark)
         spark.streams.resetTerminated()

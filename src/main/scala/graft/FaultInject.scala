@@ -112,8 +112,6 @@ object FaultInject {
           None
         } catch { case e: Throwable =>
           SessionMemo.clearAll()
-          graft.dedup.MinHashLSH.clearCache()
-          graft.similarity.Ann.clearCache()
           Some(e.toString.linesIterator.next())
         }
       val secs = (System.nanoTime() - t0) / 1e9

@@ -94,21 +94,7 @@ object Tables {
     * MinHash/ANN memos. The cached value is exactly what `count()` on the
     * freshly-loaded table returns, so width decisions derived from it are
     * bit-identical to the un-memoized form (spec-asserted). */
-  private val countCache = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]]()
-
-  /** Number of real count jobs run (cache misses) — spec instrumentation
-    * asserting "one count per session per table", not a public API. */
-  private[graft] val countComputes = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private def countsFor(spark: SparkSession) = countCache.synchronized {
-    var m = countCache.get(spark)
-    if (m == null) {
-      m = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-      countCache.put(spark, m)
-    }
-    m
-  }
+  private[graft] val counts = new SessionMemo[String, Long](_ => (), perModel = true)
 
   /** Memoized `count()` of `dir/name.parquet` — one scan per (session,
     * corpus contents, table); every later caller reads the cached Long.
@@ -117,25 +103,13 @@ object Tables {
     * path java.io cannot list (hdfs://, s3a://, not yet written),
     * `contentKey` returns a per-call-unique key, so this memo degrades
     * to always-recount there — never a stale cardinality. */
-  def rowCount(spark: SparkSession, dir: String, name: String): Long = {
-    val m = countsFor(spark)
+  def rowCount(spark: SparkSession, dir: String, name: String): Long =
     // key on the TABLE's own contents, not the whole corpus dir (the
     // SemDedupStream/PqStream idiom): a whole-dir fingerprint walks and
     // hashes every table's files on each call — even cache hits — and a
     // rewrite of an UNRELATED table would needlessly invalidate this one
-    val key = contentKey(s"$dir/$name.parquet")
-    val hit = m.get(key)
-    if (hit != null) hit.longValue
-    else {
-      // plain get/put, not computeIfAbsent: apply() + count() can touch
-      // other session state, and a nested computeIfAbsent on the same
-      // map is a recursive-update violation (see MinHashLSH.nearDups)
-      val n = apply(spark, dir, name).count()
-      countComputes.incrementAndGet()
-      m.put(key, n)
-      n
-    }
-  }
+    counts.getOrBuild(spark, SessionMemo.of(s"$dir/$name.parquet"))(
+      apply(spark, dir, name).count())
 
   /** `events.parquet` carries TIMESTAMP(NANOS) which vanilla Spark parquet
     * readers reject (parquet nanos have no Catalyst type). We read nanos as

@@ -22,8 +22,6 @@ object Verify {
         // boundary release below (its remaining partitions would need
         // the checkpoints the release drops)
         SessionMemo.clearAll()
-        graft.dedup.MinHashLSH.clearCache()
-        graft.similarity.Ann.clearCache()
       }
       // query boundary: drop the dead localCheckpoint blocks and the
       // terminated StreamExecutions (the StreamingQueryManager otherwise

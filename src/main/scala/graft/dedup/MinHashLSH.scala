@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -116,49 +116,18 @@ object MinHashLSH {
   // shared by qs1 / q33 / qd10 instead of being recomputed three times.
   // (At 100 TB the equivalent move is materializing the signature and
   // pair tables; a session-scoped persist is the single-job analog.)
-  // Keyed on the session OBJECT (not an identity hash, which the JVM can
-  // reuse after GC and hand a new session a dead-context DataFrame).
-  // NOTE the retention contract: cached DataFrames reference their own
-  // session, so an entry is NOT reclaimable while it exists (WeakHashMap
-  // values must not strongly refer to their keys) — callers disposing a
-  // session should clearCache(). Within the driver contract (one session
-  // per Verify/Bench JVM) nothing accumulates.
-  private val cache = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-
-  private def perSession(spark: SparkSession) = cache.synchronized {
-    var m = cache.get(spark)
-    if (m == null) {
-      m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-      cache.put(spark, m)
-    }
-    m
-  }
-
-  /** Memo key for a corpus dir: canonical path + contents fingerprint
-    * (file list, sizes, mtimes — `Tables.contentKey`), so the same corpus
-    * reached via different path spellings hits ONE entry and a corpus
-    * rewritten IN PLACE mid-session misses the stale entry and rebuilds
-    * (spec-asserted). The superseded entry stays persisted until
-    * `clearCache()` — acceptable for the rewrite-mid-session edge; the
-    * bench clears between passes. */
-  private def canonDir(dir: String): String = graft.Tables.contentKey(dir)
+  // Keyed by `SessionMemo.of(dir)`: the same corpus reached via
+  // different path spellings hits ONE entry, and a corpus rewritten IN
+  // PLACE mid-session evicts and unpersists the stale entry and rebuilds
+  // (spec-asserted).
+  private val memo = new SessionMemo[String, DataFrame](_.unpersist())
 
   /** Memoized, persisted signature table for a corpus. */
   def signatures(spark: SparkSession, dir: String): DataFrame =
-    perSession(spark).computeIfAbsent(s"sig|${canonDir(dir)}", _ =>
+    memo.getOrBuild(spark, SessionMemo.of(dir) / "sig")(
       docSignatures(spark, Tables(spark, dir, "documents"))
         .toDF("doc_id", "txt_md5", "sh", "bands")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Drop all memoized signature/pair state (test hygiene). */
-  def clearCache(): Unit = cache.synchronized {
-    cache.values.forEach { m =>
-      m.values.forEach(df => { df.unpersist(); () })
-      m.clear()
-    }
-    cache.clear()
-  }
 
   /** Candidate pairs (doc_a < doc_b) via band-bucket collision.
     *
@@ -233,14 +202,9 @@ object MinHashLSH {
   /** Full near-dup query: LSH candidates verified with exact shingle-set
     * Jaccard. Memoized per (session, canonical corpus dir, threshold) —
     * see the cache + staleness notes above. */
-  def nearDups(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame = {
-    // resolve signatures BEFORE entering computeIfAbsent: a nested
-    // computeIfAbsent on the same ConcurrentHashMap is a recursive-update
-    // violation (IllegalStateException when the two keys share a bin)
-    val sigs = signatures(spark, dir)
-    perSession(spark).computeIfAbsent(s"pairs|${canonDir(dir)}|$threshold", _ =>
-      pairsFromSigs(sigs, threshold)
+  def nearDups(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
+    memo.getOrBuild(spark, SessionMemo.of(dir) / s"pairs|$threshold")(
+      pairsFromSigs(signatures(spark, dir), threshold)
         .orderBy("doc_a", "doc_b")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
 }

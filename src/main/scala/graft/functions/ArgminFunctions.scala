@@ -286,10 +286,8 @@ object ArgminFunctions {
       "graft argmin/argmax kernels require spark.sql.ansi.enabled=true " +
         "(their zero-norm divide-by-zero behavior is pinned to ANSI " +
         "semantics; see ArgmaxCosine)")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ArgminD2Name, exprs => ArgminDist2(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ArgmaxCosName, exprs => ArgmaxCosine(exprs(0), exprs(1)), "scala_udf")
+    registerOnce(spark, ArgminD2Name)(exprs => ArgminDist2(exprs(0), exprs(1)))
+    registerOnce(spark, ArgmaxCosName)(exprs => ArgmaxCosine(exprs(0), exprs(1)))
   }
 
   /** 0-based argmin-of-round6-squared-L2 index of `x` in `cands`. */

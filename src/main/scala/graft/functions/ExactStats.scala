@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.IntegralDivide
 import org.apache.spark.sql.functions._
 
@@ -26,13 +25,9 @@ object ExactStats {
   private val IdivName = "graft_idiv"
 
   /** Integral (floor-for-positives) division as a Column — Spark exposes
-    * no integer-div function API, so register the Catalyst expression,
-    * once per session, as `VectorFunctions.register` does. */
+    * no integer-div function API, so register the Catalyst expression. */
   private def idiv(spark: SparkSession, a: Column, b: Column): Column = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(IdivName)))
-      registry.createOrReplaceTempFunction(
-        IdivName, exprs => IntegralDivide(exprs(0), exprs(1)), "scala_udf")
+    registerOnce(spark, IdivName)(exprs => IntegralDivide(exprs(0), exprs(1)))
     call_function(IdivName, a, b)
   }
 

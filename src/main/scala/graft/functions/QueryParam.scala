@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -50,12 +49,8 @@ case class QueryParam(child: Expression) extends UnaryExpression {
 object QueryParam {
   val Name = "graft_param"
 
-  /** Idempotent per-session registration, as `VectorFunctions.register`. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(Name)))
-      registry.createOrReplaceTempFunction(Name, exprs => QueryParam(exprs.head), "scala_udf")
-  }
+  def register(spark: SparkSession): Unit =
+    registerOnce(spark, Name)(exprs => QueryParam(exprs.head))
 
   /** `value` as a query parameter of `spark`'s plans. */
   def apply(spark: SparkSession, value: Any): Column = {

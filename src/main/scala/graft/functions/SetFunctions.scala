@@ -77,8 +77,7 @@ object SetFunctions {
   val OverlapName = "graft_sorted_overlap"
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      OverlapName, exprs => SortedOverlapCount(exprs(0), exprs(1)), "scala_udf")
+    registerOnce(spark, OverlapName)(exprs => SortedOverlapCount(exprs(0), exprs(1)))
 
   /** Intersection size of two sorted string-array columns. */
   def sortedOverlap(a: Column, b: Column): Column = {

@@ -140,9 +140,7 @@ object SrpFunctions {
     val digest = java.security.MessageDigest.getInstance("MD5").digest(bb.array())
     val name = f"graft_srp_buckets_${tables}x${bits}x${dim}_" +
       digest.take(8).map(b => f"$b%02x").mkString
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => SrpBucketHashes(exprs(0), flat, tables, bits, dim),
-      "scala_udf")
+    registerOnce(spark, name)(exprs => SrpBucketHashes(exprs(0), flat, tables, bits, dim))
     call_function(name, vec)
   }
 }

@@ -83,10 +83,8 @@ object TextCounts {
   val BpeName = "graft_bpe_token_count"
 
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      PunctName, exprs => PunctCount(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BpeName, exprs => BpeTokenCount(exprs.head), "scala_udf")
+    registerOnce(spark, PunctName)(exprs => PunctCount(exprs.head))
+    registerOnce(spark, BpeName)(exprs => BpeTokenCount(exprs.head))
   }
 
   /** `regexp_count(c, '[^a-zA-Z0-9\s]')` as one byte scan. The session

@@ -58,8 +58,7 @@ object TextNormalize {
   val NfcName = "graft_nfc"
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      NfcName, exprs => NfcNormalize(exprs.head), "scala_udf")
+    registerOnce(spark, NfcName)(exprs => NfcNormalize(exprs.head))
 
   /** NFC-normalize a string column. */
   def nfc(c: Column): Column = {

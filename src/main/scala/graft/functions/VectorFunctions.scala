@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -95,15 +94,8 @@ case class DotProduct(left: Expression, right: Expression)
 object VectorFunctions {
   val DotName = "graft_dot"
 
-  /** Idempotent per-session registration (temp function registry): a
-    * registry that already holds the function (an earlier call, or
-    * `GraftExtensions`) is left as is, so no call logs a replacement. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(DotName)))
-      registry.createOrReplaceTempFunction(
-        DotName, exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-  }
+  def register(spark: SparkSession): Unit =
+    registerOnce(spark, DotName)(exprs => DotProduct(exprs(0), exprs(1)))
 
   /** Codegen'd dot product of two array<double> columns. */
   def dot(a: Column, b: Column): Column = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1579,28 +1579,10 @@ object TextOps {
   // collect + train), the memo is billed to its first consumer within a
   // bench pass, and the bench clears it at every pass boundary so each
   // pass pays training exactly once. Values are driver-pure (collected
-  // rows), so no Spark blocks can dangle on a failure.
-  private val bpeCache = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[
-      String, (Array[(Long, String, String, Long)],
-               Array[(String, Seq[String], Long)])]]()
-
-  private def bpePerSession(spark: SparkSession) = bpeCache.synchronized {
-    var m = bpeCache.get(spark)
-    if (m == null) {
-      m = new java.util.concurrent.ConcurrentHashMap[
-        String, (Array[(Long, String, String, Long)],
-                 Array[(String, Seq[String], Long)])]()
-      bpeCache.put(spark, m)
-    }
-    m
-  }
-
-  /** Drop the memoized BPE models (bench pass-boundary hygiene). */
-  def clearBpeCache(): Unit = bpeCache.synchronized {
-    bpeCache.values.forEach(_.clear())
-    bpeCache.clear()
-  }
+  // rows), so no Spark blocks can dangle on a failure; `None` marks a
+  // corpus above the vocabulary gate.
+  private val bpeModels = new SessionMemo[String, Option[(
+    Array[(Long, String, String, Long)], Array[(String, Seq[String], Long)])]](_ => ())
 
   /** Corpus-trained BPE model via the session memo: (merge table,
     * post-merge vocabulary), both rebuilt as local relations from the
@@ -1620,19 +1602,22 @@ object TextOps {
                                   nMerges: Int)
       : (DataFrame, Dataset[(String, Seq[String], Long)]) = {
     import spark.implicits._
-    val key = s"${graft.Tables.contentKey(s"$dir/documents.parquet")}|bpe|$nMerges"
-    val memo = bpePerSession(spark)
-    val hit = memo.get(key)
-    val cached = if (hit != null) hit else {
-      val v0 = bpeV0(spark, dir)
-      val (mt, vocab, nTerms) = bpeTrainCounted(v0, nMerges)
-      if (nTerms > BpeDriverVocabGate) return (mt, vocab)
-      memo.computeIfAbsent(key, _ =>
-        (mt.as[(Long, String, String, Long)].collect(), vocab.collect()))
+    def train() = bpeTrainCounted(bpeV0(spark, dir), nMerges)
+    var distributed: Option[(DataFrame, Dataset[(String, Seq[String], Long)])] = None
+    val model = bpeModels.getOrBuild(spark,
+        SessionMemo.of(s"$dir/documents.parquet") / s"bpe|$nMerges") {
+      val (mt, vocab, nTerms) = train()
+      if (nTerms > BpeDriverVocabGate) { distributed = Some((mt, vocab)); None }
+      else Some((mt.as[(Long, String, String, Long)].collect(), vocab.collect()))
     }
-    (spark.createDataset(cached._1.toSeq)
-      .toDF("iter", "sym_a", "sym_b", "n_occ").orderBy("iter"),
-      spark.createDataset(cached._2.toSeq))
+    model match {
+      case Some((mt, vocab)) =>
+        (spark.createDataset(mt.toSeq)
+          .toDF("iter", "sym_a", "sym_b", "n_occ").orderBy("iter"),
+          spark.createDataset(vocab.toSeq))
+      case None =>
+        distributed.getOrElse { val (mt, vocab, _) = train(); (mt, vocab) }
+    }
   }
 
   /** The weighted character-level start vocabulary every BPE entry

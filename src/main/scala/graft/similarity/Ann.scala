@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.operators.VectorOps.{cosine, dot, dvec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -180,7 +180,7 @@ object Ann {
     * stays a driver-held k×dim local relation throughout. */
   private[graft] def refinedCentroids(emb: DataFrame,
       iters: Int = DefaultCoarseRefineIters,
-      memoKey: Option[String] = None): DataFrame = {
+      memoKey: Option[SessionMemo.Address[String]] = None): DataFrame = {
     val spark = emb.sparkSession
     def train(): DataFrame = {
       var cents = localCentroids(emb)
@@ -205,14 +205,7 @@ object Ann {
     // refinement is per-MODEL-BUILD cost like codebook training (two
     // corpus passes per round) — memoized through the same cache so
     // every consumer of the same corpus reuses the k×dim local relation
-    memoKey match {
-      case Some(base) =>
-        val cached = cbPerSession(spark).computeIfAbsent(
-          s"$base|cents|$iters", _ => { val df = train(); (df.schema, df.collect()) })
-        spark.createDataFrame(
-          java.util.Arrays.asList(cached._2: _*), cached._1)
-      case None => train()
-    }
+    trained(emb, memoKey, s"cents|$iters")(train())
   }
 
   /** Shared probe/rank tail: rank cells per query, restrict candidates to
@@ -259,86 +252,46 @@ object Ann {
   // same pattern as MinHashLSH's signature memo, and the single-job
   // analog of "the index table is built once and probed by every query"
   // at warehouse scale. Without it every call wrote a fresh corpus-sized
-  // copy into the temp dir. Keys carry the corpus CONTENTS fingerprint
-  // (`Tables.contentKey`: file list + sizes + mtimes), so a corpus
-  // rewritten in place mid-session misses the stale entry and the index
-  // rebuilds (spec-asserted) instead of serving stale rows.
-  private val idxCache = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, String]]()
+  // copy into the temp dir. A corpus rewritten in place mid-session
+  // misses the stale entry and the index rebuilds (spec-asserted)
+  // instead of serving stale rows.
+  private val indexes = new SessionMemo[String, String](_ => ())
 
-  private def perSession(spark: SparkSession) = idxCache.synchronized {
-    var m = idxCache.get(spark)
-    if (m == null) {
-      m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-      idxCache.put(spark, m)
-    }
-    m
-  }
+  // Trained PQ codebooks and refined centroids, memoized per (session,
+  // corpus contents, family tag, m/subDim/iters/k) — VERDICT r10 #3:
+  // codebook training is per-MODEL-BUILD cost (a vector store trains
+  // once and serves every query), but qe8/qe9/qe10/qs18/qs20/qe14 each
+  // paid the k=64 × 2-round training inside their measured window.
+  // Training is deterministic, so every consumer reconstructs the
+  // identical m×k×(dim/m) local relation from the cached rows.
+  private val codebooks = new SessionMemo[String,
+    (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])](
+    _ => (), perModel = true)
 
-  private def canonDir(dir: String): String = graft.Tables.contentKey(dir)
-
-  // Trained PQ codebooks, memoized per (session, corpus contents, family
-  // tag, m/subDim/iters/k) — VERDICT r10 #3: codebook training is
-  // per-MODEL-BUILD cost (a vector store trains once and serves every
-  // query), but qe8/qe9/qe10/qs18/qs20/qe14 each paid the k=64 × 2-round
-  // training inside their measured window. Training is deterministic, so
-  // every consumer reconstructs the identical m×k×(dim/m) local relation
-  // from the cached rows; contentKey misses on an in-place corpus
-  // rewrite exactly like the index memo above.
-  private val cbCache = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[
-      String, (org.apache.spark.sql.types.StructType,
-               Array[org.apache.spark.sql.Row])]]()
-
-  private def cbPerSession(spark: SparkSession) = cbCache.synchronized {
-    var m = cbCache.get(spark)
-    if (m == null) {
-      m = new java.util.concurrent.ConcurrentHashMap[
-        String, (org.apache.spark.sql.types.StructType,
-                 Array[org.apache.spark.sql.Row])]()
-      cbCache.put(spark, m)
-    }
-    m
-  }
-
-  /** Memo-key base for a corpus-trained codebook: contents fingerprint +
+  /** Memo address of a corpus-trained codebook: the corpus dir plus the
     * family tag ("pq" raw vectors, "rpq" residuals). */
-  private[graft] def codebookMemoKey(dir: String, tag: String): String =
-    s"${graft.Tables.contentKey(dir)}|$tag"
+  private[graft] def codebookMemoKey(dir: String,
+                                     tag: String): SessionMemo.Address[String] =
+    SessionMemo.of(dir) / tag
 
-  /** Drop only the memoized index locations, keeping trained codebooks.
-    * Bench inter-pass hygiene uses THIS: the index build is billed to
-    * its first consumer each pass (like the MinHash signature kernel),
-    * but codebook/centroid TRAINING is a per-model-build cost with its
-    * own explicit bench entry (`buildPqModels`) — clearing it between
-    * passes re-billed the training to whichever PQ query ran first
-    * alphabetically (VERDICT r11: qe10 read 5.13 s for a ~2 s query). */
-  def clearIndexCache(): Unit = idxCache.synchronized {
-    idxCache.values.forEach(_.clear())
-    idxCache.clear()
-  }
-
-  /** Drop only the trained codebook/centroid memos — the explicit
-    * model-build bench entry evicts these inside its own timed window
-    * so training cost is measured where it belongs. */
-  def clearCodebookCache(): Unit = cbCache.synchronized {
-    cbCache.values.forEach(_.clear())
-    cbCache.clear()
-  }
-
-  /** Drop all memoized index locations and trained codebooks (failure
-    * hygiene; the dirs themselves are reclaimed by the JVM-exit
-    * cleanup). */
-  def clearCache(): Unit = {
-    clearIndexCache()
-    clearCodebookCache()
-  }
+  /** A trained local relation, through the codebook memo at `variant` of
+    * `memoKey` when there is one. */
+  private def trained(emb: DataFrame, memoKey: Option[SessionMemo.Address[String]],
+                      variant: String)(train: => DataFrame): DataFrame =
+    memoKey.fold(train) { at =>
+      val spark = emb.sparkSession
+      val (schema, rows) = codebooks.getOrBuild(spark, at / variant) {
+        val df = train
+        (df.schema, df.collect()) // local relation — collect is free
+      }
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    }
 
   private[similarity] def knnIndexedRaw(spark: SparkSession, dir: String,
       k: Int = 5, nprobe: Int = 2, queryPred: String = "vec_id < 5"): DataFrame = {
     val emb = Tables(spark, dir, "embeddings")
     val cents = localCentroids(emb)
-    val idx = perSession(spark).computeIfAbsent(canonDir(dir), _ => {
+    val idx = indexes.getOrBuild(spark, SessionMemo.of(dir)) {
       val t = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
       graft.streaming.Replay.cleanupAtExit(t)
       // build: one pass over the corpus, stored partitioned by cell id;
@@ -347,7 +300,7 @@ object Ann {
       assignments(emb, cents).repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(s"$t/assign")
       t
-    })
+    }
     val assigned = spark.read.parquet(s"$idx/assign")
       .select(col("vec_id"), col("cell"), col("v"))
     probeRank(cents, assigned, k, nprobe, emb.filter(expr(queryPred)))
@@ -713,7 +666,7 @@ object Ann {
     * the eager training above it). */
   def buildPqModels(spark: SparkSession, dir: String,
                     m: Int = 4): DataFrame = {
-    clearCodebookCache()
+    codebooks.clear()
     val emb = Tables(spark, dir, "embeddings")
     val subDim = pqSubDim(emb, m)
     // the plain-PQ codebook and the coarse→residual chain are
@@ -758,7 +711,8 @@ object Ann {
 
   private[graft] def ivfPqResidualTopk(emb: DataFrame, k: Int, m: Int,
                                        nprobe: Int, maxQ: Int,
-                                       memoKey: Option[String] = None): DataFrame = {
+                                       memoKey: Option[SessionMemo.Address[String]] = None)
+      : DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val subDim = pqSubDim(emb, m)
@@ -1179,16 +1133,12 @@ object Ann {
     // method's tasks back-fill executors freed by the current method's
     // tail (guide §2.6: actions are only sequential because driver code
     // calls them sequentially). Each count is exact, so the report is
-    // unchanged; memoized codebooks/centroids are behind
-    // ConcurrentHashMap.computeIfAbsent, so a cold-session race trains
-    // each model exactly once.
+    // unchanged; concurrent lookups of one memoized codebook share one
+    // build, so a cold-session race trains each model exactly once.
     // pre-train the shared memoized models SEQUENTIALLY before the
     // fan-out (ADVICE r20): the five methods all consume the pq/rpq
-    // codebooks and refined centroids through the session memo, and a
-    // cold memo would otherwise run a full multi-job training inside a
-    // ConcurrentHashMap.computeIfAbsent mapping function — blocking any
-    // sibling thread whose key hashes to the same bin for the whole
-    // training job. Warm memos make the mapping functions cheap lookups.
+    // codebooks and refined centroids through the session memo, so with
+    // warm memos no method thread waits on another's training job.
     val subDim = pqSubDim(emb, 4)
     pqCodebook(emb, 4, subDim, memoKey = Some(codebookMemoKey(dir, "pq")))
     val wcents = refinedCentroids(emb, memoKey = Some(codebookMemoKey(dir, "rpq")))
@@ -1394,7 +1344,7 @@ object Ann {
     * corpus (vec_id, codes ordered by sub) — the batch composition of
     * `pqCodebook` + `pqCodes`. */
   private[similarity] def pqEncode(emb: DataFrame, m: Int, subDim: Int,
-                                   memoKey: Option[String] = None)
+                                   memoKey: Option[SessionMemo.Address[String]] = None)
       : (DataFrame, DataFrame) = {
     val cb = pqCodebook(emb, m, subDim, memoKey = memoKey)
     (cb, pqCodes(emb, cb, m, subDim))
@@ -1432,19 +1382,10 @@ object Ann {
   private[graft] def pqCodebook(emb: DataFrame, m: Int, subDim: Int,
                                 iters: Int = DefaultPqRefineIters,
                                 k: Int = DefaultPqCodes,
-                                memoKey: Option[String] = None): DataFrame =
-    memoKey match {
-      case Some(base) =>
-        val spark = emb.sparkSession
-        val cached = cbPerSession(spark).computeIfAbsent(
-          s"$base|m=$m|sd=$subDim|it=$iters|k=$k", _ => {
-            val cb = trainPqCodebook(emb, m, subDim, iters, k)
-            (cb.schema, cb.collect()) // local relation — collect is free
-          })
-        spark.createDataFrame(
-          java.util.Arrays.asList(cached._2: _*), cached._1)
-      case None => trainPqCodebook(emb, m, subDim, iters, k)
-    }
+                                memoKey: Option[SessionMemo.Address[String]] = None)
+      : DataFrame =
+    trained(emb, memoKey, s"m=$m|sd=$subDim|it=$iters|k=$k")(
+      trainPqCodebook(emb, m, subDim, iters, k))
 
   private def trainPqCodebook(emb: DataFrame, m: Int, subDim: Int,
                               iters: Int, k: Int): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.dedup.{Clusters, Collapse}
 import graft.operators.VectorOps.{cosine, dot}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -189,26 +189,10 @@ object SemDedup {
   }
 
   // The built index is memoized per (session, corpus contents + quantizer
-  // config) — same pattern and staleness contract as Ann.knnIndexed's
-  // (`Tables.contentKey`: an in-place corpus rewrite misses the stale
-  // entry and rebuilds, spec-asserted).
-  private val idxCache = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, String]]()
-
-  private def perSession(spark: SparkSession) = idxCache.synchronized {
-    var m = idxCache.get(spark)
-    if (m == null) {
-      m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-      idxCache.put(spark, m)
-    }
-    m
-  }
-
-  /** Drop all memoized index locations (bench inter-pass hygiene). */
-  def clearCache(): Unit = idxCache.synchronized {
-    idxCache.values.forEach(_.clear())
-    idxCache.clear()
-  }
+  // config) — same pattern and staleness contract as Ann.knnIndexed's:
+  // an in-place corpus rewrite misses the stale entry and rebuilds
+  // (spec-asserted).
+  private val indexes = new SessionMemo[String, String](_ => ())
 
   private val pairsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("doc_a",
@@ -239,7 +223,7 @@ object SemDedup {
     * exactly the contract of the streaming form (SemDedupStream). */
   def keepListIndexed(spark: SparkSession, emb: DataFrame,
                       basePred: Column, threshold: Double, s: Int,
-                      memoKey: String): DataFrame = {
+                      memoKey: SessionMemo.Address[String]): DataFrame = {
     val keyed = emb.select(col("vec_id"), col("embedding"),
       xxhash64(lit(1), col("embedding")).as("k1"),
       xxhash64(lit(2), col("embedding")).as("k2"))
@@ -269,8 +253,7 @@ object SemDedup {
     import scala.concurrent.duration.Duration
     val idxF = Future {
       spark.sparkContext.setJobDescription("semdedup: base index build")
-      try perSession(spark).computeIfAbsent(
-        s"$memoKey|$basePred|$threshold|$s", _ => {
+      try indexes.getOrBuild(spark, memoKey / s"$basePred|$threshold|$s") {
         val t = java.nio.file.Files.createTempDirectory("graft_sem_idx").toString
         graft.streaming.Replay.cleanupAtExit(t)
         Ann.assignments(live.filter(basePred), cents)
@@ -289,7 +272,7 @@ object SemDedup {
           .select(col("a.vec_id").as("doc_a"), col("b.vec_id").as("doc_b"))
           .write.mode("overwrite").parquet(s"$t/pairs")
         t
-      }) finally spark.sparkContext.setJobDescription(null)
+      } finally spark.sparkContext.setJobDescription(null)
     }
 
     // increment pass: O(increment) assignment, broadcast probe of the
@@ -325,13 +308,14 @@ object SemDedup {
   /** The raw (pre-sink) probe frame of the increment pass — what the DPP
     * spec inspects; mirrors Ann.knnIndexedRaw's plan-visibility note. */
   private[similarity] def indexedCrossProbe(spark: SparkSession, emb: DataFrame,
-      basePred: Column, threshold: Double, s: Int, memoKey: String): DataFrame = {
+      basePred: Column, threshold: Double, s: Int,
+      memoKey: SessionMemo.Address[String]): DataFrame = {
     val cents = Ann.localCentroids(emb)
     val norm2 = dot(col("embedding"), col("embedding"))
     val live = emb.select(col("vec_id"), lit(0).as("label"), col("embedding"))
       .filter(norm2 =!= 0 && !isnan(norm2))
-    val t = perSession(spark).get(s"$memoKey|$basePred|$threshold|$s")
-    require(t != null, "index not built — call keepListIndexed first")
+    val t = indexes.getOrBuild(spark, memoKey / s"$basePred|$threshold|$s")(
+      throw new IllegalStateException("index not built — call keepListIndexed first"))
     val stored = spark.read.parquet(s"$t/assign")
       .select(col("vec_id"), col("cell"), col("sub"), col("v"))
     val assignedInc = Ann.assignments(live.filter(!basePred), cents)
@@ -383,6 +367,6 @@ object SemDedup {
     val u = plantedUnion(spark, dir).localCheckpoint(true)
     keepListIndexed(spark, u, basePred = col("vec_id") < 100000L,
       threshold = 0.95, s = subBits(u.count()),
-      memoKey = s"planted|${graft.Tables.contentKey(dir)}")
+      memoKey = SessionMemo.of(dir) / "planted")
   }
 }

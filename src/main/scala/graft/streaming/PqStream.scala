@@ -207,8 +207,7 @@ object PqStream {
     * batch boundary. */
   private def stagedPqLake(spark: SparkSession, dir: String,
                            emb: DataFrame): String =
-    StreamFold.stage("pq|" + Tables.contentKey(s"$dir/embeddings.parquet"),
-        "graft_pq_lake") { t =>
+    StreamFold.stage(spark, s"$dir/embeddings.parquet", "graft_pq_lake") { t =>
       emb.select(col("vec_id"), col("embedding"))
         .repartitionByRange(2, col("vec_id"))
         .write.mode("overwrite").parquet(t)
@@ -260,8 +259,7 @@ object PqStream {
     * row), memoized like the qs18/qs20 lake. */
   private def stagedPcaLake(spark: SparkSession, dir: String,
                             emb: DataFrame): String =
-    StreamFold.stage("pca|" + Tables.contentKey(s"$dir/embeddings.parquet"),
-        "graft_pca_lake") { t =>
+    StreamFold.stage(spark, s"$dir/embeddings.parquet", "graft_pca_lake") { t =>
       emb.select(col("vec_id"), col("embedding"), col("label"))
         .repartitionByRange(2, col("vec_id"))
         .write.mode("overwrite").parquet(t)

@@ -474,8 +474,7 @@ object Replay {
   /** The documents table staged as TWO id-range files, shared by every
     * docs-lake stream entry (qs10, qs16, qs17, ...). */
   private def stagedDocsLake(spark: SparkSession, dir: String): String =
-    StreamFold.stage(graft.Tables.contentKey(s"$dir/documents.parquet"),
-        "graft_sdedup_lake") { t =>
+    StreamFold.stage(spark, s"$dir/documents.parquet", "graft_sdedup_lake") { t =>
       graft.Tables(spark, dir, "documents")
         .repartitionByRange(2, col("doc_id"))
         .write.mode("overwrite").parquet(t)
@@ -906,7 +905,8 @@ object Replay {
                            pathGlobFilter: String = "*.parquet",
                            workDir: Option[String] = None,
                            compactEvery: Int = 16,
-                           piecesMemoKey: Option[String] = None): DataFrame = {
+                           piecesMemoKey: Option[graft.SessionMemo.Address[String]] = None)
+      : DataFrame = {
     val segSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("n_chars", LongType),
@@ -933,7 +933,7 @@ object Replay {
     // the piece vocabulary is order-independent, so qs36 shares qd43's
     // memo entry (the qs25/qs26 ticketed-signature-share precedent)
     streamUnigramSegment(spark, stagedDocsLake(spark, dir),
-      piecesMemoKey = Some(graft.Tables.contentKey(s"$dir/documents.parquet")))
+      piecesMemoKey = Some(graft.SessionMemo.of(s"$dir/documents.parquet")))
 
   /** Streaming LEAKAGE-SAFE split — qd35's arrival-time form: documents
     * stream in, every micro-batch pays only its own near-dup kernel +

@@ -188,9 +188,8 @@ object SemDedupStream {
     val u = SemDedup.plantedUnion(spark, dir).localCheckpoint(true)
     // the frozen quantizer below and the stream itself still run in full
     // per pass; only the staging is memoized (`StreamFold.stage`)
-    val staged = StreamFold.stage(
-        s"planted|$files|${graft.Tables.contentKey(s"$dir/embeddings.parquet")}",
-        "graft_semdedup_lake") { t =>
+    val staged = StreamFold.stage(spark, s"$dir/embeddings.parquet",
+        s"graft_semdedup${files}_lake") { t =>
       u.select(col("vec_id"), col("embedding"))
         .repartitionByRange(files, col("vec_id"))
         .write.mode("overwrite").parquet(t)

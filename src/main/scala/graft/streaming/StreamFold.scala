@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import graft.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -48,20 +49,21 @@ private[graft] object StreamFold {
     reader.parquet(dir)
   }
 
+  private val lakes = new SessionMemo[String, String](_ => (), perModel = true)
+
   /** Stream INPUT scaffolding (a lake restaged as range files so the
     * oracle-checked run crosses a batch boundary), not computed state:
-    * memoized per `key` — the source contents — so a bench suite stages
-    * each lake once across passes; the streams over it still run in full
-    * on every invocation. */
-  private val stagedLakes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def stage(key: String, prefix: String)(write: String => Unit): String =
-    stagedLakes.computeIfAbsent(key, _ => {
+    * memoized per `source` table's contents and `prefix`, which names
+    * the staging, so a bench suite stages each lake once across passes;
+    * the streams over it still run in full on every invocation. */
+  def stage(spark: SparkSession, source: String, prefix: String)(
+      write: String => Unit): String =
+    lakes.getOrBuild(spark, SessionMemo.of(source) / prefix) {
       val t = Files.createTempDirectory(prefix).toString
       Replay.cleanupAtExit(t)
       write(t)
       t
-    })
+    }
 
   /** The raw loop: drains `source`'s backlog, running `body` on each
     * micro-batch, then returns. Stateless writers call it directly. */

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -143,7 +143,9 @@ object Unigram {
     * plus the path-independent vocabulary hit count. */
   def qd43UnigramSegment(spark: SparkSession, dir: String): DataFrame =
     segmentFrame(Tables(spark, dir, "documents"),
-      Some(graft.Tables.contentKey(s"$dir/documents.parquet"))).orderBy("doc_id")
+      Some(SessionMemo.of(s"$dir/documents.parquet"))).orderBy("doc_id")
+
+  private val pieces = new SessionMemo[String, Set[String]](_ => ())
 
   /** The induced vocabulary collected to a driver set — bounded by
     * VocabCap, the qe8-codebook genus. A pure function of the corpus
@@ -152,43 +154,21 @@ object Unigram {
     * document SET under any path/partitioning induces the same set,
     * which is what lets qs36's staged lake share qd43's memo entry.
     *
-    * `memoKey` (corpus contents fingerprint) memoizes the collected set
+    * `memoKey` (the corpus's memo address) memoizes the collected set
     * per session — the MinHash-signature policy: trained once per
     * corpus, billed to the first consumer in a bench pass, cleared at
     * every pass boundary. */
-  private val pieceCache = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    java.util.concurrent.ConcurrentHashMap[String, Set[String]]]()
-
-  /** Drop the memoized piece vocabularies (bench pass hygiene). */
-  def clearCache(): Unit = pieceCache.synchronized {
-    pieceCache.values.forEach(_.clear())
-    pieceCache.clear()
-  }
-
   private[graft] def inducedPieces(docs: DataFrame,
-                                   memoKey: Option[String] = None): Set[String] = {
+      memoKey: Option[SessionMemo.Address[String]] = None): Set[String] = {
     val spark = docs.sparkSession
     import spark.implicits._
     def induce(): Set[String] = vocab(docs).select("piece").as[String].collect().toSet
-    memoKey match {
-      case Some(k) =>
-        val m = pieceCache.synchronized {
-          var mm = pieceCache.get(spark)
-          if (mm == null) {
-            mm = new java.util.concurrent.ConcurrentHashMap[String, Set[String]]()
-            pieceCache.put(spark, mm)
-          }
-          mm
-        }
-        m.computeIfAbsent(s"$k|unigram", _ => induce())
-      case None => induce()
-    }
+    memoKey.fold(induce())(at => pieces.getOrBuild(spark, at)(induce()))
   }
 
   /** The vocab-induce + broadcast + per-partition DP kernel. */
   private[graft] def segmentFrame(docsDf: DataFrame,
-                                  memoKey: Option[String] = None): DataFrame =
+      memoKey: Option[SessionMemo.Address[String]] = None): DataFrame =
     segmentWith(docsDf, inducedPieces(docsDf, memoKey))
 
   /** Segment against an EXPLICIT vocabulary — the frozen-model entry

@@ -126,4 +126,16 @@ class ArgminFunctionsSpec extends AnyFunSuite {
       rows.select(ArgminFunctions.argmaxCosine(col("x"), empty)).collect()
     }
   }
+
+  test("register twice keeps the registered function") {
+    val registry = spark.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(ArgminFunctions.ArgminD2Name)
+    ArgminFunctions.register(spark)
+    val info = registry.lookupFunction(id).get
+    val builder = registry.lookupFunctionBuilder(id).get
+    ArgminFunctions.register(spark)
+    assert(registry.lookupFunction(id).get eq info,
+      "a second register replaced graft_argmin_d2")
+    assert(registry.lookupFunctionBuilder(id).get eq builder)
+  }
 }

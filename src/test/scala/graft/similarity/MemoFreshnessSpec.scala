@@ -10,8 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (MinHash signatures/pairs, the materialized IVF index) are keyed on
   * `Tables.contentKey` — canonical path PLUS file list/sizes/mtimes — so
   * a corpus rewritten IN PLACE mid-session misses the stale entry and
-  * rebuilds. Before round 6 these were path-keyed: the rewrite served
-  * stale results until an explicit clearCache(). */
+  * rebuilds. */
 class MemoFreshnessSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -45,21 +44,36 @@ class MemoFreshnessSpec extends AnyFunSuite {
   test("MinHash signature memo rebuilds after an in-place corpus rewrite") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_memo_mh").toString
-    def write(texts: Seq[(Long, String)]): Unit =
+    // the rewrite lands from outside the session (write aside, then swap
+    // the directory), so Spark refreshes no cache of the path itself:
+    // the memo alone must notice and drop the old signatures
+    def write(texts: Seq[(Long, String)]): Unit = {
+      val staged = s"$dir/staged-${System.nanoTime}"
       texts.toDF("doc_id", "text")
         .select(col("doc_id"), col("text"), lit("en").as("lang"),
           lit("spec").as("source"), length(col("text")).cast("long").as("n_chars"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        .coalesce(1).write.parquet(staged)
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(s"$dir/documents.parquet"))
+      Files.move(java.nio.file.Paths.get(staged),
+        java.nio.file.Paths.get(s"$dir/documents.parquet"))
+    }
 
     write(Seq((1L, "the quick brown fox jumps over the lazy dog again and again"),
       (2L, "an entirely different document about spark partitioning")))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
     assert(graft.dedup.MinHashLSH.signatures(spark, dir).count() == 2)
+    val firstSigs = sc.getPersistentRDDs.keySet -- before
+    assert(firstSigs.nonEmpty, "the signature table is persisted")
 
     write(Seq((1L, "the quick brown fox jumps over the lazy dog again and again"),
       (2L, "an entirely different document about spark partitioning"),
       (3L, "a third document that only exists after the rewrite")))
     // path-keyed memos served the stale 2-row signature table here
     assert(graft.dedup.MinHashLSH.signatures(spark, dir).count() == 3)
+    assert((firstSigs & sc.getPersistentRDDs.keySet).isEmpty,
+      "the superseded signature table must be unpersisted")
   }
 
   test("semantic-dedup base index is keyed by the base/increment split") {
@@ -87,7 +101,7 @@ class MemoFreshnessSpec extends AnyFunSuite {
       .localCheckpoint(true)
     val want = SemDedup.keepList(emb, threshold = 0.95, s = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val memoKey = s"spec|${java.util.UUID.randomUUID}"
+    val memoKey = graft.SessionMemo.Address(s"spec|${java.util.UUID.randomUUID}", "v1")
     val narrow = SemDedup.keepListIndexed(spark, emb,
         basePred = col("vec_id") < 10L, threshold = 0.95, s = 4,
         memoKey = memoKey)
@@ -136,16 +150,16 @@ class MemoFreshnessSpec extends AnyFunSuite {
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
     write(20)
-    val misses0 = Tables.countComputes.get()
+    val misses0 = Tables.counts.builds.get()
     assert(Tables.rowCount(spark, dir, "embeddings") == 20L)
-    assert(Tables.countComputes.get() == misses0 + 1, "first call counts")
+    assert(Tables.counts.builds.get() == misses0 + 1, "first call counts")
     assert(Tables.rowCount(spark, dir, "embeddings") == 20L)
-    assert(Tables.countComputes.get() == misses0 + 1,
+    assert(Tables.counts.builds.get() == misses0 + 1,
       "second call must hit the memo — zero extra count jobs")
     write(37) // in-place rewrite changes the contents fingerprint
     assert(Tables.rowCount(spark, dir, "embeddings") == 37L,
       "rewrite must miss the stale entry and recount")
-    assert(Tables.countComputes.get() == misses0 + 2)
+    assert(Tables.counts.builds.get() == misses0 + 2)
   }
 
   test("qe2 + qe17 share one memoized embeddings count (band width unchanged)") {
@@ -155,11 +169,11 @@ class MemoFreshnessSpec extends AnyFunSuite {
     // e.count() scan to size the adaptive band width
     val n = Tables.rowCount(spark, dir, "embeddings")
     assert(n > 0)
-    val before = Tables.countComputes.get()
+    val before = Tables.counts.builds.get()
     val qe2 = graft.operators.VectorOps.qe2NearDupPairs(spark, dir)
     val qe17 = graft.operators.VectorOps.qe17Dbscan(spark, dir)
     assert(qe2.count() > 0 && qe17.count() > 0)
-    assert(Tables.countComputes.get() == before,
+    assert(Tables.counts.builds.get() == before,
       "banded generator must reuse the memoized corpus size")
     // the width the memo feeds is bit-identical to the un-memoized form:
     // subBits is a pure function of the cardinality count() returns

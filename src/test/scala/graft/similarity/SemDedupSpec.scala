@@ -116,7 +116,7 @@ class SemDedupSpec extends AnyFunSuite {
     val s = 4
     val want = SemDedup.keepList(emb, threshold = 0.95, s = s)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val memoKey = s"spec|${java.util.UUID.randomUUID}"
+    val memoKey = graft.SessionMemo.Address(s"spec|${java.util.UUID.randomUUID}", "v1")
     val got = SemDedup.keepListIndexed(spark, emb,
         basePred = col("vec_id") < 1000L, threshold = 0.95, s = s,
         memoKey = memoKey)
@@ -167,7 +167,7 @@ class SemDedupSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     val got = SemDedup.keepListIndexed(spark, emb,
         basePred = col("vec_id") < 200L, threshold = 0.95, s = 4,
-        memoKey = s"spec|${java.util.UUID.randomUUID}")
+        memoKey = graft.SessionMemo.Address(s"spec|${java.util.UUID.randomUUID}", "v1"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     assert(got == want)
   }
