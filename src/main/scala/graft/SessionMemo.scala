@@ -47,6 +47,8 @@ final class SessionMemo[K, V](release: V => Unit,
 
   /** Number of builds started (misses) — spec instrumentation. */
   private[graft] val builds = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Number of lookups served by the slot's entry — spec instrumentation. */
+  private[graft] val hits = new java.util.concurrent.atomic.AtomicLong(0)
 
   private def slots(spark: SparkSession) = {
     var m = bySession.get(spark)
@@ -63,7 +65,7 @@ final class SessionMemo[K, V](release: V => Unit,
     val cell = bySession.synchronized {
       val m = slots(spark)
       val old = m.get(slot)
-      if (old != null && old.key == key) old
+      if (old != null && old.key == key) { hits.incrementAndGet(); old }
       else {
         if (old != null) dispose(old)
         val c = new Cell(key, () => { builds.incrementAndGet(); build })

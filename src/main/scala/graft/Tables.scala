@@ -61,13 +61,22 @@ object Tables {
       // store's own listing API; this keeps local-mode semantics honest.
       s"$canon#unlisted-${unlistedKeys.incrementAndGet()}"
     } else {
-      val listing = files.map(f =>
-        s"${f.getAbsolutePath.stripPrefix(canon)}:${f.length}:${f.lastModified}")
-        .mkString("\n")
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(listing.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      s"$canon#$digest"
+      s"$canon#${digest(files, canon)}"
     }
+  }
+
+  /** The fingerprint of exactly `files` (local files, in any order): the
+    * path, length and mtime of each, so it changes when any of them is
+    * rewritten or the set changes. A missing file reads as length 0. */
+  def filesKey(files: Seq[java.io.File]): String =
+    digest(files.sortBy(_.getAbsolutePath), "")
+
+  private def digest(files: Seq[java.io.File], base: String): String = {
+    val listing = files.map(f =>
+      s"${f.getAbsolutePath.stripPrefix(base)}:${f.length}:${f.lastModified}")
+      .mkString("\n")
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(listing.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
   /** The absolute, normalized form of a path: the part of its

@@ -1335,44 +1335,27 @@ object Replay {
       out.iterator
     }
 
-    val name = s"graft_sess_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = eventStream(spark, dir)
+    StreamFold.collect(eventStream(spark, dir)
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
       .as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(sessionize)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
-      .select(col("user_id"), col("session_id"), col("n_events"),
+      .toDF(), "append", "graft_sess_")(
+      _.select(col("user_id"), col("session_id"), col("n_events"),
         col("start_us"), col("end_us"))
-      .orderBy("user_id", "session_id")
+        .orderBy("user_id", "session_id"))
   }
 
   /** §2.8 windowed aggregation as a stream: tumbling 1-hour windows with a
     * watermark, complete-mode replay == batch q18_hourly_rollup. */
-  def streamHourlyRollup(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_hourly_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = eventStream(spark, dir)
+  def streamHourlyRollup(spark: SparkSession, dir: String): DataFrame =
+    StreamFold.collect(eventStream(spark, dir)
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        graft.functions.ExactStats.sum2dp(col("value")).as("value_sum"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
-      .select(unix_micros(col("window.start")).as("hour_us"),
+        graft.functions.ExactStats.sum2dp(col("value")).as("value_sum")),
+      "complete", "graft_hourly_")(
+      _.select(unix_micros(col("window.start")).as("hour_us"),
         col("event_type"), col("n_events"), col("value_sum"))
-      .orderBy("hour_us", "event_type")
-  }
+        .orderBy("hour_us", "event_type"))
 }

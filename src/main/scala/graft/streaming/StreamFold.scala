@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import scala.jdk.CollectionConverters._
+
 /** The one micro-batch loop behind every arrival-time operator: the
   * reference's per-PUT Lambda trigger as a `Trigger.AvailableNow` replay
   * of a file-source stream, checkpointed under the stream's work dir.
@@ -77,6 +79,34 @@ private[graft] object StreamFold {
       }
       .start()
       .awaitTermination()
+
+  /** A stream with no per-batch fold (a `flatMapGroupsWithState`, a
+    * complete-mode windowed aggregate) drained into a memory sink under a
+    * fresh work dir's `ckpt`. `read` shapes the sink's table into the
+    * result, which is collected into a local frame; then the table is
+    * dropped and the work dir deleted, so a call, failed or not, leaves no
+    * table, rows or checkpoint behind. */
+  def collect(source: DataFrame, outputMode: String, prefix: String)(
+      read: DataFrame => DataFrame): DataFrame = {
+    val spark = source.sparkSession
+    val dir = work(None, prefix)
+    val name = s"$prefix${java.util.UUID.randomUUID.toString.replace("-", "")}"
+    try {
+      source.writeStream
+        .outputMode(outputMode)
+        .format("memory")
+        .queryName(name)
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", s"$dir/ckpt")
+        .start()
+        .awaitTermination()
+      val out = read(spark.table(name))
+      spark.createDataFrame(out.collect().toSeq.asJava, out.schema)
+    } finally {
+      spark.catalog.dropTempView(name)
+      Replay.deleteRecursively(new java.io.File(dir))
+    }
+  }
 
   /** One micro-batch's commit: `appends` are call-by-need (a thunk may
     * block on a driver-side future so the other tables' writes start at

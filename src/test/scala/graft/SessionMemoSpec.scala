@@ -16,7 +16,8 @@ class SessionMemoSpec extends AnyFunSuite {
       assert(memo.getOrBuild(spark, "p", "p#1")("v1") == "v1")
       assert(memo.getOrBuild(spark, "p", "p#1")("other") == "v1")
       assert(memo.getOrBuild(spark, "q", "q#1")("w1") == "w1")
-      assert(memo.builds.get == 2 && memo.size == 2 && released.isEmpty)
+      assert(memo.builds.get == 2 && memo.hits.get == 1)
+      assert(memo.size == 2 && released.isEmpty)
       assert(memo.getOrBuild(spark, "p", "p#2")("v2") == "v2")
       assert(released.toSeq == Seq("v1") && memo.size == 2)
       // a per-call unique key (an unlistable path) never grows the memo

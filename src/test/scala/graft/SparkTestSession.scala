@@ -17,4 +17,26 @@ object SparkTestSession {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs `body` runs, counted through a job group; the listener
+    * bus is drained before and after, so no other case's jobs leak in
+    * and none of `body`'s arrive late. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+    val group = s"graft-test-jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "job count")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(l)
+    jobs.get
+  }
 }

@@ -27,4 +27,17 @@ class StreamFoldSpec extends AnyFunSuite {
       finally walk.close()
     assert(stray.isEmpty, stray.mkString("\n"))
   }
+
+  test("the memory-sink streams drop their tables and equal their batch queries") {
+    val spark = graft.SparkTestSession.spark
+    val dir = graft.SparkTestSession.sfDir
+    def sinkTables(): Set[String] = spark.catalog.listTables().collect().map(_.name)
+      .filter(n => n.startsWith("graft_sess_") || n.startsWith("graft_hourly_")).toSet
+    val before = sinkTables()
+    assert(Replay.streamSessionize(spark, dir).collect().toSeq ==
+      graft.operators.Events.q19Sessionize(spark, dir).collect().toSeq)
+    assert(Replay.streamHourlyRollup(spark, dir).collect().toSeq ==
+      graft.operators.Events.q18HourlyRollup(spark, dir).collect().toSeq)
+    assert(sinkTables() == before)
+  }
 }

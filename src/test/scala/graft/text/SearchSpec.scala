@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.SparkTestSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.SparkTestSession.jobsOf
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -99,26 +99,6 @@ class SearchSpec extends AnyFunSuite {
     val empty = Search.bm25(edgeDocs, Seq.empty, 10)
     assert(empty.columns.toSeq == Seq("rank", "doc_id", "score", "n_terms_matched"))
     assert(empty.collect().isEmpty)
-  }
-
-  /** Spark jobs `body` runs, counted through a job group. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    org.apache.spark.GraftTestBridge.drainListenerBus(sc)
-    val group = "SearchSpec-bm25-jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "bm25 job count")
-      try body finally sc.clearJobGroup()
-      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
-    } finally sc.removeSparkListener(l)
-    jobs.get
   }
 
   test("bm25 runs one Spark job per warm query") {

@@ -15,9 +15,16 @@ Prints every run's result line as it lands, with the stolen cores
 (perfbench/work/results/<workload>-s<seed>-t<trace>.json in the side's
 tree), then per metric: the median and quartiles of each side, the
 relative delta of the medians, the parent's interquartile distance
-relative to its median, and the pairs the change won (ties count for
-neither side); then each side's correct runs, failed/attempted
-operations and flagged runs.
+relative to its median, the pairs the change won (ties count for
+neither side) and a verdict; then each side's correct runs,
+failed/attempted operations and flagged runs.
+
+The verdict has two parts. "claim met" means the change's median is
+better, the change won at least nine tenths of the pairs, and the
+medians differ by more than the parent's interquartile distance;
+otherwise "no claim". For a metric with a `bound` in BENCHMARK.json,
+"within bound" means the change's median is not worse than the parent's
+by more than that fraction of it; otherwise "OUT OF BOUND".
 """
 import argparse
 import json
@@ -44,6 +51,19 @@ def quartiles(xs):
         return xs[0], xs[0]
     q = statistics.quantiles(xs, n=4, method="inclusive")
     return q[0], q[2]
+
+
+def verdict(metric, pm, cm, p1, p3, wins, pairs):
+    """Whether a gain can be claimed and whether the change keeps the bound."""
+    lower = metric["better"] == "lower"
+    better = cm < pm if lower else cm > pm
+    claim = better and wins * 10 >= 9 * pairs and abs(cm - pm) > p3 - p1
+    out = "claim met" if claim else "no claim"
+    bound = metric.get("bound")
+    if bound is not None and pm:
+        worse = (cm - pm if lower else pm - cm) / abs(pm)
+        out += ", within bound" if worse <= bound else ", OUT OF BOUND"
+    return out
 
 
 def build(tree):
@@ -115,7 +135,7 @@ def main():
     pairs = [(p, c) for p, c in zip(results["parent"], results["change"]) if p and c]
     print(f"\n{a.workload} trace={a.trace}: {len(pairs)} complete pairs of {len(seeds)}")
     print(f"{'metric':44} {'parent med [q1, q3]':>30} {'change med [q1, q3]':>30} "
-          f"{'delta':>8} {'p.iqr':>7} {'wins':>7}")
+          f"{'delta':>8} {'p.iqr':>7} {'wins':>7}  verdict")
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         ps = [p["metrics"][name]["value"] for p, _ in pairs]
@@ -128,7 +148,8 @@ def main():
         rel = (lambda x: f"{x / pm:+.1%}") if pm else (lambda x: "-")
         print(f"{name:44} {f'{pm:.4g} [{p1:.4g}, {p3:.4g}]':>30} "
               f"{f'{cm:.4g} [{c1:.4g}, {c3:.4g}]':>30} {rel(cm - pm):>8} "
-              f"{rel(p3 - p1).lstrip('+'):>7} {f'{wins}/{len(pairs)}':>7}")
+              f"{rel(p3 - p1).lstrip('+'):>7} {f'{wins}/{len(pairs)}':>7}  "
+              f"{verdict(m, pm, cm, p1, p3, wins, len(pairs))}")
     for side in ("parent", "change"):
         rs = results[side]
         ok = [r for r in rs if r]
