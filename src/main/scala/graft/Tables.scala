@@ -25,6 +25,17 @@ object Tables {
     else spark.read.parquet(path)
   }
 
+  /** `path`'s glob expanded to its matches, as Spark's reader expands
+    * it: Spark probes a single path argument for a streaming sink's
+    * metadata dir, which logs a WARN and a stack trace for a glob. A glob
+    * that matches nothing stays, for Spark's own path-not-found error. */
+  def globbed(spark: SparkSession, path: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val matched = Option(fs.globStatus(p)).toSeq.flatten.map(_.getPath.toString)
+    if (matched.isEmpty) Seq(path) else matched
+  }
+
   /** Contents fingerprint of a corpus dir for memo keys: the canonical
     * path PLUS a digest of the recursive (relative path, size, mtime)
     * listing. Session memos of derived state (MinHash signatures, the

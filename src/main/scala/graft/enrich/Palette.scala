@@ -212,7 +212,8 @@ object Palette {
     import spark.implicits._
     val n = math.max(spark.sparkContext.defaultParallelism, 2)
     val budget = pixelBudget(spark) // resolved on the driver, closure-captured
-    spark.read.format("image").option("dropInvalid", "true").load(imageDir)
+    spark.read.format("image").option("dropInvalid", "true")
+      .load(Tables.globbed(spark, imageDir): _*)
       .select(col("image.*"))
       .filter(col("mode") === 16) // CV_8UC3: 8-bit BGR
       .withColumn("igId", element_at(split(col("origin"), "/"), -2))

@@ -64,7 +64,8 @@ object PostIngest {
 
   /** S1: PERMISSIVE JSON scan of the post lake. */
   def readPosts(spark: SparkSession, path: String): DataFrame =
-    withEnvelope(spark.read.schema(postSchema).options(permissive).json(path))
+    withEnvelope(spark.read.schema(postSchema).options(permissive)
+      .json(graft.Tables.globbed(spark, path): _*))
 
   private val permissive = Map(
     "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")

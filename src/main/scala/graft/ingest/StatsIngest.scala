@@ -40,7 +40,7 @@ object StatsIngest {
       .schema(statsSchema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
+      .json(graft.Tables.globbed(spark, path): _*)
 
   /** P2 prune + F10 blank→null + F8 date parse → staging_users shape
     * (create_redshift_tables.py:17-33). */

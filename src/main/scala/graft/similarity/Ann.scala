@@ -670,34 +670,20 @@ object Ann {
     val emb = Tables(spark, dir, "embeddings")
     val subDim = pqSubDim(emb, m)
     // the plain-PQ codebook and the coarse→residual chain are
-    // INDEPENDENT trainings over the same corpus — overlap them (guide
-    // §2.6: actions are only sequential because driver code calls them
-    // sequentially), so the chain's stage tails are back-filled by the
-    // plain codebook's jobs. Each training is deterministic and lands
-    // under its own memo key, so the overlap changes wall time only.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (cb, (cents, rcb)) = try {
-      val fPq = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-        def call(): DataFrame = pqCodebook(emb, m, subDim,
-          memoKey = Some(codebookMemoKey(dir, "pq")))
+    // independent trainings over the same corpus, each landing under its
+    // own memo key: overlap them, so the chain's stage tails are
+    // back-filled by the plain codebook's jobs
+    val (cb, (cents, rcb)) = graft.Overlap.both(spark)(
+      "pq: train codebook" -> (() => pqCodebook(emb, m, subDim,
+        memoKey = Some(codebookMemoKey(dir, "pq")))),
+      "rpq: train centroids and residual codebook" -> { () =>
+        val c = refinedCentroids(emb,
+          memoKey = Some(codebookMemoKey(dir, "rpq")))
+        val r = pqCodebook(
+          residualFrame(emb, c).select(col("vec_id"), col("embedding")),
+          m, subDim, memoKey = Some(codebookMemoKey(dir, "rpq")))
+        (c, r)
       })
-      val fChain = pool.submit(
-        new java.util.concurrent.Callable[(DataFrame, DataFrame)] {
-          def call(): (DataFrame, DataFrame) = {
-            val c = refinedCentroids(emb,
-              memoKey = Some(codebookMemoKey(dir, "rpq")))
-            val r = pqCodebook(
-              residualFrame(emb, c).select(col("vec_id"), col("embedding")),
-              m, subDim, memoKey = Some(codebookMemoKey(dir, "rpq")))
-            (c, r)
-          }
-        })
-      def unwrap[T](f: java.util.concurrent.Future[T]): T =
-        try f.get() catch {
-          case e: java.util.concurrent.ExecutionException => throw e.getCause
-        }
-      (unwrap(fPq), unwrap(fChain))
-    } finally pool.shutdown()
     cb.select(lit("pq").as("family"), col("sub"), col("code"))
       .unionByName(rcb.select(lit("rpq").as("family"), col("sub"), col("code")))
       .groupBy(col("family"))
@@ -1128,40 +1114,23 @@ object Ann {
       "residual_pq" -> (() => qe10IvfPqResidualTopk(spark, dir, k, maxQ = maxQ)),
       "sq8" -> (() => qe11SqTopk(spark, dir, k, maxQ)),
       "truncated_rerank" -> (() => qe12TruncatedRerank(spark, dir, k, maxQ = maxQ)))
-    // the five method evaluations are INDEPENDENT jobs over the shared
-    // checkpointed ground truth — submit them concurrently so the next
-    // method's tasks back-fill executors freed by the current method's
-    // tail (guide §2.6: actions are only sequential because driver code
-    // calls them sequentially). Each count is exact, so the report is
-    // unchanged; concurrent lookups of one memoized codebook share one
-    // build, so a cold-session race trains each model exactly once.
-    // pre-train the shared memoized models SEQUENTIALLY before the
-    // fan-out (ADVICE r20): the five methods all consume the pq/rpq
-    // codebooks and refined centroids through the session memo, so with
-    // warm memos no method thread waits on another's training job.
+    // the five method evaluations are independent exact counts over the
+    // checkpointed ground truth, run concurrently below; the pq/rpq
+    // codebooks and refined centroids they all read through the session
+    // memo are trained SEQUENTIALLY first (ADVICE r20), so no method
+    // thread waits on another's training job.
     val subDim = pqSubDim(emb, 4)
     pqCodebook(emb, 4, subDim, memoKey = Some(codebookMemoKey(dir, "pq")))
     val wcents = refinedCentroids(emb, memoKey = Some(codebookMemoKey(dir, "rpq")))
     pqCodebook(residualFrame(emb, wcents).select(col("vec_id"), col("embedding")),
       4, subDim, memoKey = Some(codebookMemoKey(dir, "rpq")))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(methods.size)
-    val rows = try {
-      val futures = methods.map { case (name, mk) =>
-        name -> pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = mk().select(col("q_id"), col("cand_id"))
-            .join(exact, Seq("q_id", "cand_id")).count()
-        })
-      }
-      futures.map { case (name, f) =>
-        // unwrap so a method failure surfaces as ITS exception, not a
-        // wrapped ExecutionException (ADVICE r20)
-        val hits = try f.get() catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        }
-        (name, nq, hits, hits * 1000000L / (nq * k))
-      }
-    } finally pool.shutdown()
+    val hits = graft.Overlap.all(spark)(methods.map { case (name, mk) =>
+      s"recall: $name" -> (() => mk().select(col("q_id"), col("cand_id"))
+        .join(exact, Seq("q_id", "cand_id")).count())
+    }: _*)
+    val rows = methods.zip(hits).map { case ((name, _), h) =>
+      (name, nq, h, h * 1000000L / (nq * k))
+    }
     rows.toDF("method", "n_queries", "hits", "recall_micro")
       .orderBy("method")
   }

@@ -241,46 +241,37 @@ object SemDedup {
     // per session. The base/increment SPLIT is part of the key: a second
     // call with the same corpus but a different basePred must rebuild —
     // reusing a store built for the old split would leave rows that moved
-    // between base and increment in neither side, silently dropping pairs
-    // the base-index build (memo) and the increment's assignment
-    // checkpoint are INDEPENDENT — overlap them (guide §2.6, the
-    // qb1/qd40 precedent): the build runs on a future while the main
-    // thread materializes the increment; both are deterministic and
-    // compute the identical frames they did sequentially. Await.result
-    // rethrows the original failure.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val idxF = Future {
-      spark.sparkContext.setJobDescription("semdedup: base index build")
-      try indexes.getOrBuild(spark, memoKey / s"$basePred|$threshold|$s") {
-        val t = java.nio.file.Files.createTempDirectory("graft_sem_idx").toString
-        graft.streaming.Replay.cleanupAtExit(t)
-        Ann.assignments(live.filter(basePred), cents)
+    // between base and increment in neither side, silently dropping pairs.
+    // The base-index build (memo) and the increment's assignment
+    // checkpoint are independent: overlap them.
+    val (idx, assignedInc) = graft.Overlap.both(spark)(
+      "semdedup: base index build" -> (() =>
+        indexes.getOrBuild(spark, memoKey / s"$basePred|$threshold|$s") {
+          val t = java.nio.file.Files.createTempDirectory("graft_sem_idx").toString
+          graft.streaming.Replay.cleanupAtExit(t)
+          Ann.assignments(live.filter(basePred), cents)
+            .withColumn("sub", signBucket(col("v"), s))
+            // cluster rows by cell BEFORE the partitioned write: straight from
+            // the 32 assignment partitions every task would open a file per
+            // cell it touches (~cells x tasks tiny files); one trivial shuffle
+            // makes it one file per cell
+            .repartition(col("cell"))
+            .write.mode("overwrite").partitionBy("cell").parquet(s"$t/assign")
+          val sa = spark.read.parquet(s"$t/assign")
+          sa.as("a").join(sa.as("b"),
+              col("a.cell") === col("b.cell") && col("a.sub") === col("b.sub") &&
+              col("a.vec_id") < col("b.vec_id"))
+            .filter(!isnan(sim) && sim >= threshold)
+            .select(col("a.vec_id").as("doc_a"), col("b.vec_id").as("doc_b"))
+            .write.mode("overwrite").parquet(s"$t/pairs")
+          t
+        }),
+      // increment pass: O(increment) assignment, broadcast probe of the
+      // cell-partitioned store (DPP), increment-internal self-join
+      "semdedup: increment assignment" -> (() =>
+        Ann.assignments(live.filter(!basePred), cents)
           .withColumn("sub", signBucket(col("v"), s))
-          // cluster rows by cell BEFORE the partitioned write: straight from
-          // the 32 assignment partitions every task would open a file per
-          // cell it touches (~cells x tasks tiny files); one trivial shuffle
-          // makes it one file per cell
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$t/assign")
-        val sa = spark.read.parquet(s"$t/assign")
-        sa.as("a").join(sa.as("b"),
-            col("a.cell") === col("b.cell") && col("a.sub") === col("b.sub") &&
-            col("a.vec_id") < col("b.vec_id"))
-          .filter(!isnan(sim) && sim >= threshold)
-          .select(col("a.vec_id").as("doc_a"), col("b.vec_id").as("doc_b"))
-          .write.mode("overwrite").parquet(s"$t/pairs")
-        t
-      } finally spark.sparkContext.setJobDescription(null)
-    }
-
-    // increment pass: O(increment) assignment, broadcast probe of the
-    // cell-partitioned store (DPP), increment-internal self-join
-    val assignedInc = Ann.assignments(live.filter(!basePred), cents)
-      .withColumn("sub", signBucket(col("v"), s))
-      .localCheckpoint(true)
-    val idx = Await.result(idxF, Duration.Inf)
+          .localCheckpoint(true)))
     val stored = spark.read.parquet(s"$idx/assign")
       .select(col("vec_id"), col("cell"), col("sub"), col("v"))
     val storedPairs = spark.read.schema(pairsSchema).parquet(s"$idx/pairs")

@@ -50,8 +50,9 @@ import org.apache.spark.sql.types.StructType
   *   - single-stream use only: micro-batches run sequentially within a
   *     stream; concurrent streams need one instance each;
   *   - a batch's writes all finish before its commit returns or throws:
-  *     a failed append never leaves a sibling still writing into
-  *     `b<batchId>`, where it could race the replayed batch's overwrite.
+  *     a failed append cancels its siblings' running jobs and never
+  *     leaves one still writing into `b<batchId>`, where it could race
+  *     the replayed batch's overwrite.
   *
   * All listing/walking/deleting goes through the Hadoop `FileSystem`
   * resolved from the `work` path (the active session's Hadoop conf when
@@ -160,21 +161,18 @@ private[streaming] final class AppendOnlyState(val work: String,
     endBatchWork(ss, batchId, Nil,
       appends.map { case (t, df) => (t, () => df) }: _*)
 
-  /** `endBatch` with two overlap levers for the per-micro-batch job floor
-    * (guide §2.6 — jobs are only sequential because driver code calls
-    * them sequentially):
+  /** `endBatch` with two overlap levers for the per-micro-batch job floor,
+    * all run through one `Overlap.all`:
     *   - `side`: caller-supplied labeled writes (e.g. the near-dup
-    *     emission write) that ride the SAME concurrent pool as the state
-    *     appends. Each must be an idempotent batch-keyed write whose
-    *     inputs are listing-snapshotted state reads / checkpointed blocks
-    *     — then its order against the appends is free. It is awaited here
-    *     because compaction below may DELETE the generation its listing
-    *     snapshot points at;
-    *   - `appends` are call-by-need: a thunk may block on a driver-side
-    *     future (e.g. a batch-kernel checkpoint) so that the OTHER
-    *     tables' writes start immediately instead of serializing behind
-    *     it. Thunks run on pool threads; they must not depend on the
-    *     active-session thread-local. */
+    *     emission write) that run concurrently with the state appends.
+    *     Each must be an idempotent batch-keyed write whose inputs are
+    *     listing-snapshotted state reads / checkpointed blocks — then its
+    *     order against the appends is free. It is awaited here because
+    *     compaction below may DELETE the generation its listing snapshot
+    *     points at;
+    *   - `appends` are call-by-need: a thunk may force a shared lazy
+    *     value (e.g. a batch-kernel checkpoint) so that the OTHER tables'
+    *     writes start immediately instead of serializing behind it. */
   def endBatchWork(ss: SparkSession, batchId: Long,
                    side: Seq[(String, () => Unit)],
                    appends: (String, () => DataFrame)*): Unit = {
@@ -182,35 +180,19 @@ private[streaming] final class AppendOnlyState(val work: String,
     val stateDir = s"$work/g$gen"
     val replay = batchDirsIn(gen).contains(batchId)
     // the per-table writes are independent jobs over disjoint output dirs
-    // — submit them concurrently so a batch pays ONE write-job latency,
-    // not one per table (micro-batch fixed cost is the dominant term for
-    // small batches; jobs from separate threads schedule concurrently)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val appendWrites = appends.toSeq.map { case (t, mkDf) => Future {
-      // description is thread-local — label each pool thread's write
-      val df = mkDf()
-      ss.sparkContext.setJobDescription(s"state: append $t")
-      // NO blanket coalesce here: for several streams the append frame
-      // IS the batch kernel pass (qs17's map-side feature rows, the
-      // codec streams), and a coalesce would squeeze that compute into
-      // few tasks — measured +32% on qs17 when this write briefly
-      // coalesce(4)'d. Callers whose append frames are cheap
-      // projections of checkpointed blocks coalesce at the call site;
-      // compaction below still bounds the steady-state file count.
-      try df.write.mode("overwrite").parquet(s"$stateDir/$t/b$batchId")
-      finally ss.sparkContext.setJobDescription(null)
-    }}
-    val sideWrites = side.map { case (label, work) => Future {
-      ss.sparkContext.setJobDescription(label)
-      try work() finally ss.sparkContext.setJobDescription(null)
-    }}
-    // wait for EVERY write before surfacing a failure (`Future.sequence`
-    // fails fast), then rethrow the first failure itself
-    val writes = appendWrites ++ sideWrites
-    writes.foreach(Await.ready(_, Duration.Inf))
-    writes.foreach(_.value.get.get)
+    // — run them concurrently so a batch pays ONE write-job latency, not
+    // one per table (micro-batch fixed cost is the dominant term for
+    // small batches). NO blanket coalesce here: for several streams the
+    // append frame IS the batch kernel pass (qs17's map-side feature
+    // rows, the codec streams), and a coalesce would squeeze that compute
+    // into few tasks — measured +32% on qs17 when this write briefly
+    // coalesce(4)'d. Callers whose append frames are cheap projections of
+    // checkpointed blocks coalesce at the call site; compaction below
+    // still bounds the steady-state file count.
+    graft.Overlap.all(ss)(appends.map { case (t, mkDf) =>
+      s"state: append $t" -> (() =>
+        mkDf().write.mode("overwrite").parquet(s"$stateDir/$t/b$batchId"))
+    } ++ side: _*)
     hasData = true
     if (!replay) batchesInGen += 1
     if (batchesInGen >= compactEvery) {
@@ -220,10 +202,8 @@ private[streaming] final class AppendOnlyState(val work: String,
         val df =
           if (files.nonEmpty) ss.read.schema(sch).parquet(files: _*)
           else ss.createDataFrame(ss.sparkContext.emptyRDD[Row], sch)
-        ss.sparkContext.setJobDescription(s"state: compact $t")
-        try folds.get(t).fold(df)(f => f(df))
-          .coalesce(4).write.mode("overwrite").parquet(s"$next/$t/c${gen + 1}")
-        finally ss.sparkContext.setJobDescription(null)
+        graft.Overlap.labeled(ss, s"state: compact $t")(folds.get(t).fold(df)(f => f(df))
+          .coalesce(4).write.mode("overwrite").parquet(s"$next/$t/c${gen + 1}"))
       }
       val upto = fs.create(new Path(s"$next/_upto"), true)
       try upto.write(batchId.toString.getBytes) finally upto.close()

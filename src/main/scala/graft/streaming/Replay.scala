@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Overlap.labeled
 import graft.streaming.StreamFold.Delta
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -70,16 +71,6 @@ object Replay {
       poisonAfterBatch = -1L
       throw new RuntimeException(s"test poison: crash after batch $batchId")
     }
-
-  /** Label the jobs an eager action launches (guide §1.5) so the UI and
-    * the JobProfile listener can attribute per-batch cost to its phase;
-    * restores the caller's description (thread-local). */
-  private[graft] def labeled[T](ss: SparkSession, desc: String)(f: => T): T = {
-    val sc = ss.sparkContext
-    val old = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try f finally sc.setJobDescription(old)
-  }
 
   val eventsSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
@@ -678,21 +669,13 @@ object Replay {
     StreamFold.fold(docStream(spark, dir, pathGlobFilter, maxFilesPerTrigger),
         state) { (batch, _) =>
       // the dense side's per-batch docTf checkpoint (the md5-per-token
-      // pass) is the batch's only SERIAL job — start it on a future so the
-      // sparse-side appends overlap it (guide §2.6); the dt/dn append
-      // thunks then block on it inside the commit's pool while pt/dl/cs
-      // write concurrently. Await.result rethrows the original failure.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val htfF = Future {
-        labeled(batch.sparkSession, "hybrid: batch docTf")(
-          graft.text.Search.htfBatchDeltas(batch, queryTerms))
-      }
+      // pass) is the batch's only serial job: the dt/dn append thunks
+      // force it while the sparse-side appends write at once
+      lazy val htf = labeled(batch.sparkSession, "hybrid: batch docTf")(
+        graft.text.Search.htfBatchDeltas(batch, queryTerms))
       val (pt, dl, cs) = graft.text.Search.bm25BatchDeltas(batch, queryTerms)
       Delta(Seq("pt" -> (() => pt), "dl" -> (() => dl), "cs" -> (() => cs),
-        "dt" -> (() => Await.result(htfF, Duration.Inf)._1),
-        "dn" -> (() => Await.result(htfF, Duration.Inf)._2)))
+        "dt" -> (() => htf._1), "dn" -> (() => htf._2)))
     }
     val stats = state.read(spark, "cs")
       .agg(sum("n_docs").as("nl"), sum("sum_dl").as("sdl"))

@@ -109,10 +109,10 @@ private[graft] object StreamFold {
   }
 
   /** One micro-batch's commit: `appends` are call-by-need (a thunk may
-    * block on a driver-side future so the other tables' writes start at
-    * once), `side` writes ride the same pool (`AppendOnlyState.
-    * endBatchWork`), and `release` runs after the commit returns or
-    * throws. */
+    * force a lazy value it shares with a sibling, so the other tables'
+    * writes start at once), `side` writes run concurrently with them
+    * (`AppendOnlyState.endBatchWork`), and `release` runs after the
+    * commit returns or throws. */
   final case class Delta(appends: Seq[(String, () => DataFrame)],
                          side: Seq[(String, () => Unit)] = Nil,
                          release: () => Unit = () => ())

@@ -116,12 +116,6 @@ object Search {
            topK: Int = 10): DataFrame =
     query(index(spark, dir), queryTerms, topK)
 
-  /** BM25 over already-loaded `documents` rows (doc_id, text), through a
-    * fresh index; see the object doc for its plan and edge cases. */
-  private[graft] def bm25(docs: DataFrame, queryTerms: Seq[String],
-                          topK: Int): DataFrame =
-    query(index(docs), queryTerms, topK)
-
   /** idf(t) from the corpus size `n` and the term's document frequency. */
   private def idf(n: Column, df: Column): Column =
     log((n - df + 0.5) / (df + 0.5) + 1.0)
@@ -217,45 +211,22 @@ object Search {
   def hybridRrf(spark: SparkSession, dir: String, queryTerms: Seq[String],
                 candK: Int = HybridCandK, topK: Int = 10): DataFrame = {
     val docs = Tables(spark, dir, "documents")
-    // the two sides are INDEPENDENT (a BM25 query over the memoized
-    // index, built here on first use, vs the hashed-TF md5 corpus pass)
-    // and the final fuse plan would run them strictly back-to-back —
-    // overlap them on a 2-thread pool (guide §2.6, the qb1/qe14
-    // precedent). Each side materializes its own tiny frame (≤candK
-    // local candidate rows; a checkpoint of ≤docs×buckets aggregated
-    // tfs), is deterministic, and computes the identical rows it did
-    // inline, so only wall time changes.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (sparse, docTf) = try {
-      val fSparse = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-        def call(): DataFrame = {
-          spark.sparkContext.setJobDescription("hybrid: sparse candidates")
-          try query(index(spark, dir), queryTerms, candK)
-            .select(col("doc_id"), col("rank").as("sparse_rank"))
-          finally spark.sparkContext.setJobDescription(null)
-        }
-      })
+    // the two sides are independent (a BM25 query over the memoized
+    // index vs the hashed-TF md5 corpus pass), so each materializes its
+    // own tiny frame concurrently instead of back-to-back in the fuse plan
+    val Seq(sparse, docTf) = graft.Overlap.all(spark)(
+      "hybrid: sparse candidates" -> (() =>
+        query(index(spark, dir), queryTerms, candK)
+          .select(col("doc_id"), col("rank").as("sparse_rank"))),
       // the md5 bucket hash costs ~1µs/token over every token in the
       // corpus; norm + dot would otherwise re-run that subtree, so pin
       // the AGGREGATED frame (≤ docs × buckets rows — tiny) once
-      val fDocTf = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-        def call(): DataFrame = {
-          spark.sparkContext.setJobDescription("hybrid: dense docTf")
-          try docs
-            .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("term"))
-            .select(col("doc_id"), htfBucket(col("term")).as("bucket"))
-            .groupBy("doc_id", "bucket")
-            .agg(count(lit(1)).cast("double").as("tf"))
-            .localCheckpoint(true)
-          finally spark.sparkContext.setJobDescription(null)
-        }
-      })
-      def unwrap(f: java.util.concurrent.Future[DataFrame]): DataFrame =
-        try f.get() catch {
-          case e: java.util.concurrent.ExecutionException => throw e.getCause
-        }
-      (unwrap(fSparse), unwrap(fDocTf))
-    } finally pool.shutdown()
+      "hybrid: dense docTf" -> (() => docs
+        .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("term"))
+        .select(col("doc_id"), htfBucket(col("term")).as("bucket"))
+        .groupBy("doc_id", "bucket")
+        .agg(count(lit(1)).cast("double").as("tf"))
+        .localCheckpoint(true)))
     // per-doc l2 norm over ALL buckets (≤64 integer squares — exact)
     val docNorm = docTf.groupBy("doc_id")
       .agg(sqrt(sum(col("tf") * col("tf"))).as("dnorm"))

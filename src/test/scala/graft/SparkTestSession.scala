@@ -18,6 +18,27 @@ object SparkTestSession {
   }
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Called inside a task: sleeps until the task is killed (its job
+    * cancelled), for at most a minute. */
+  def sleepUntilKilled(): Unit = {
+    val end = System.nanoTime + 60L * 1000 * 1000 * 1000
+    while (System.nanoTime < end && !org.apache.spark.TaskContext.get.isInterrupted)
+      Thread.sleep(10)
+  }
+
+  /** Tasks of `group`'s jobs that are running now. */
+  def runningTasks(group: String): Int = {
+    val st = spark.sparkContext.statusTracker
+    st.getJobIdsForGroup(group).toSeq.flatMap(st.getJobInfo)
+      .flatMap(_.stageIds).flatMap(st.getStageInfo).map(_.numActiveTasks).sum
+  }
+
+  /** Waits until `group` runs `tasks` tasks, for at most 30 s. */
+  def awaitRunning(group: String, tasks: Int): Unit = {
+    val end = System.nanoTime + 30L * 1000 * 1000 * 1000
+    while (runningTasks(group) < tasks && System.nanoTime < end) Thread.sleep(20)
+  }
+
   /** Spark jobs `body` runs, counted through a job group; the listener
     * bus is drained before and after, so no other case's jobs leak in
     * and none of `body`'s arrive late. */

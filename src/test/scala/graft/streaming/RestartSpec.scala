@@ -1,6 +1,8 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import graft.{SparkTestSession, Tables}
 import graft.similarity.{Ann, SemDedup}
@@ -923,6 +925,38 @@ class RestartSpec extends AnyFunSuite {
     }
     assert(died.getMessage == "append failed")
     assert(marker.exists, "endBatchWork rethrew while a sibling write was still running")
+  }
+
+  test("AppendOnlyState endBatchWork: a failed append cancels a long sibling append") {
+    val w = work("graft_restart_cancel")
+    val sch = StructType(Seq(StructField("id", LongType)))
+    val s = new AppendOnlyState(w, Seq(("slow", sch), ("bad", sch)), compactEvery = 100)
+    // four single-row tasks that each write until their job is cancelled
+    val untilKilled = udf { (id: Long) => SparkTestSession.sleepUntilKilled(); id }
+    val slow = spark.range(0, 4, 1, 4).select(untilKilled(col("id")).as("id"))
+    val slowDir = Paths.get(w, "g0", "slow", "b0")
+    def listing(): Seq[String] = {
+      val walk = Files.walk(Paths.get(w))
+      try walk.iterator.asScala.map(_.toString).toList.sorted finally walk.close()
+    }
+    val group = s"graft-restart-cancel-${java.util.UUID.randomUUID}"
+    val t0 = System.nanoTime
+    spark.sparkContext.setJobGroup(group, group)
+    val died = try intercept[IllegalStateException] {
+      s.endBatchWork(spark, 0L, Nil,
+        "slow" -> (() => slow),
+        // fail once every slow task is running
+        "bad" -> (() => {
+          SparkTestSession.awaitRunning(group, 4)
+          throw new IllegalStateException("append failed")
+        }))
+    } finally spark.sparkContext.clearJobGroup()
+    val after = listing()
+    assert(died.getMessage == "append failed")
+    assert((System.nanoTime - t0) / 1e9 < 30, "the slow append ran to its end")
+    assert(!Files.exists(slowDir.resolve("_SUCCESS")))
+    Thread.sleep(2000)
+    assert(listing() == after, "a write landed after endBatchWork threw")
   }
 
   test("AppendOnlyState read() snapshots the file listing at call time") {

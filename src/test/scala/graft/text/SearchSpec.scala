@@ -29,13 +29,16 @@ class SearchSpec extends AnyFunSuite {
 
   private def assertSameAsLongForm(docs: DataFrame, q: Seq[String],
                                    topK: Int): Array[Row] = {
-    val fused = Search.bm25(docs, q, topK)
-    val long = longFormBm25(docs, q, topK)
-    assert(fused.schema.map(f => (f.name, f.dataType)) ==
-      long.schema.map(f => (f.name, f.dataType)), s"schema, query $q")
-    val got = fused.collect()
-    assert(got.toSeq == long.collect().toSeq, s"query $q, topK $topK")
-    got
+    val index = Search.index(docs)
+    try {
+      val fused = Search.query(index, q, topK)
+      val long = longFormBm25(docs, q, topK)
+      assert(fused.schema.map(f => (f.name, f.dataType)) ==
+        long.schema.map(f => (f.name, f.dataType)), s"schema, query $q")
+      val got = fused.collect()
+      assert(got.toSeq == long.collect().toSeq, s"query $q, topK $topK")
+      got
+    } finally index.rows.unpersist()
   }
 
   /** Hand-made corpus covering the edge cases the bench corpora lack. */
@@ -96,9 +99,12 @@ class SearchSpec extends AnyFunSuite {
     assert(abc(ids.indexOf(1L)).getDouble(2) == abc(ids.indexOf(8L)).getDouble(2))
     assert(abc.forall(r => !r.isNullAt(1)))
 
-    val empty = Search.bm25(edgeDocs, Seq.empty, 10)
-    assert(empty.columns.toSeq == Seq("rank", "doc_id", "score", "n_terms_matched"))
-    assert(empty.collect().isEmpty)
+    val index = Search.index(edgeDocs)
+    try {
+      val empty = Search.query(index, Seq.empty, 10)
+      assert(empty.columns.toSeq == Seq("rank", "doc_id", "score", "n_terms_matched"))
+      assert(empty.collect().isEmpty)
+    } finally index.rows.unpersist()
   }
 
   test("bm25 runs one Spark job per warm query") {
