@@ -1,10 +1,16 @@
 package graft.text
 
 import graft.Tables
-import graft.functions.QueryParam
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{classic, Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** BM25 ranked full-text search over the documents corpus — the engine
@@ -16,94 +22,124 @@ import scala.jdk.CollectionConverters._
   *   score(d, Q) = Σ_t idf(t) · tf(t,d)·(k1+1) / (tf(t,d) + k1·(1−b+b·|d|/avgdl))
   *   idf(t) = ln( (N − df(t) + 0.5) / (df(t) + 0.5) + 1 )
   *
-  * Plan shape: index once, then one projection and a top-k per query.
-  * `index(docs)` tokenizes every row once and keeps the rows
-  * (doc_id, toks, dl) persisted and materialized, with the corpus
-  * statistics as driver values: N, avgdl and a term dictionary
-  * term → df over the rows with a doc_id. `query` scores the cached rows
-  * in one projection, with N, avgdl and each df_i bound as constants
-  * (`QueryParam`: no join, no broadcast, and no code compiled per
-  * query), keeps only rows matching at least one term, and takes the
-  * top k, which the driver numbers into ranks. A warm query is one Spark
-  * job, with no footer read, no statistics shuffle and no broadcast;
-  * its result is a local frame. `bm25(spark, dir, …)` memoizes the index
-  * per session and `documents` contents (`Tables.contentKey`), so an
-  * in-place rewrite of the corpus rebuilds it and unpersists the old
-  * rows. Scores are rounded to 6 decimals BEFORE ranking so ordering is
-  * stable across engines (the per-doc term sum is a ≤|Q| element float
-  * sum). Ties are broken by doc_id.
+  * Plan shape: index once on the driver, then score each query there.
+  * `index(docs)` tokenizes every row in one Spark collect (Spark's
+  * `split(trim(text))`, so tokens are Spark's) and keeps, by row
+  * ordinal, each row's doc_id and length, plus N, avgdl and the
+  * postings term → (row ordinals, tf) over the rows with a doc_id.
+  * `query` scores term-at-a-time over the query terms' postings only
+  * and takes the top k: a warm query runs no Spark job, and its result
+  * is a local frame. `bm25(spark, dir, …)` memoizes the index per
+  * session and `documents` contents (`Tables.contentKey`), so an
+  * in-place rewrite of the corpus rebuilds it. The arithmetic is the
+  * Spark plan's (`bm25From`, the long-form reference): `StrictMath.log`
+  * as Spark's `log`, the same literals, each document's sum folded from
+  * 0.0 in distinct-query-term order, and Spark's HALF_UP `round(·, 6)`
+  * BEFORE ranking, so ordering is stable across engines. Ties are
+  * broken by doc_id, then by row ordinal.
   *
-  * Scale note: the term dictionary is driver-resident, like a Lucene
-  * term dictionary; its size is the corpus vocabulary, not the corpus.
-  * The token rows stay distributed in the executors' block managers.
+  * Scale note: the index is driver state sized by the corpus, like
+  * `PostIndex`. `SizeEstimator` measures 0.59 MB for the 3,000-caption
+  * `stream_serve` corpus (seed 11) and 1.10 MB for the 5,000 rows of
+  * sf0.1 `documents`.
   *
-  * `doc_id` is the key of `documents`: every row is its own document.
-  * A row with a null doc_id counts toward N and avgdl but never toward
-  * df or the ranking; a row with null text counts toward N only. A
-  * query term given m times multiplies its tf by m. An empty query
-  * returns an empty frame with the usual four columns.
+  * `doc_id` is the key of `documents`, but every row is its own
+  * document: two rows sharing a doc_id rank separately. A row with a
+  * null doc_id counts toward N and avgdl but never toward df or the
+  * ranking; a row with null text counts toward N only. A query term
+  * given m times multiplies its tf by m. An empty query returns an
+  * empty frame with the usual four columns.
   */
 object Search {
   val K1 = 1.2
   val B = 0.75
 
-  /** A built-once BM25 index over `documents` rows: the token rows
-    * (doc_id, toks, dl), persisted, and the corpus statistics as driver
-    * values. `avgdl` is 0 when no row has text; no row can match then. */
-  final class Bm25Index private[Search] (val rows: DataFrame, val n: Double,
-      val avgdl: Double, val df: Map[String, Long])
+  /** A built-once BM25 index over `documents` rows, held on the driver.
+    * Row ordinal i is the i-th row in scan order: `docIds(i)` is its
+    * doc_id as a Spark internal value and `dl(i)` its token count (-1
+    * for null text). `postings` maps a term to the ordinals of the rows
+    * with a doc_id that hold it, ascending, and its tf in each. `avgdl`
+    * is 0 when no row has text; no row can match then. */
+  final class Bm25Index private[Search] (private[Search] val spark: SparkSession,
+      private[Search] val docId: StructField, private[Search] val docIds: Array[Any],
+      private[Search] val dl: Array[Int], val n: Double, val avgdl: Double,
+      private[Search] val postings: Map[UTF8String, (Array[Int], Array[Int])])
 
-  /** Tokenize `docs` (doc_id, text) once into a `Bm25Index`: one scan
-    * materializes the persisted rows and yields N and avgdl, one
-    * aggregate over each doc's distinct terms yields the dictionary. */
+  /** Tokenize `docs` (doc_id, text) into a `Bm25Index`: one Spark job
+    * collects each row's doc_id and tokens, the driver counts the rest. */
   def index(docs: DataFrame): Bm25Index = {
-    val rows = docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
-      .select(col("doc_id"), col("toks"), size(col("toks")).cast("double").as("dl"))
-      .persist()
-    val stats = rows.agg(count(lit(1)).cast("double"), avg("dl")).head()
-    val df = rows.filter(col("doc_id").isNotNull)
-      .select(explode(array_distinct(col("toks"))).as("term"))
-      .groupBy("term").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    new Bm25Index(rows, stats.getDouble(0),
-      if (stats.isNullAt(1)) 0.0 else stats.getDouble(1), df)
+    val qe = docs.select(col("doc_id"), split(trim(col("text")), "\\s+")).queryExecution
+    val all = SQLExecution.withNewExecutionId(qe)(qe.executedPlan.executeCollect())
+    val docId = qe.analyzed.schema.head
+    val docIds = all.map(r => InternalRow.copyValue(r.get(0, docId.dataType)))
+    val dl = all.map(r => if (r.isNullAt(1)) -1 else r.getArray(1).numElements())
+    val postings = mutable.HashMap.empty[UTF8String,
+      (mutable.ArrayBuilder.ofInt, mutable.ArrayBuilder.ofInt)]
+    for (i <- all.indices if docIds(i) != null && dl(i) >= 0) {
+      val toks = all(i).getArray(1)
+      val tf = mutable.HashMap.empty[UTF8String, Int]
+      (0 until toks.numElements()).foreach { j =>
+        val t = toks.getUTF8String(j)
+        tf(t) = tf.getOrElse(t, 0) + 1
+      }
+      tf.foreach { case (t, c) =>
+        val (rows, tfs) = postings.getOrElseUpdate(t.clone(),
+          (new mutable.ArrayBuilder.ofInt, new mutable.ArrayBuilder.ofInt))
+        rows += i
+        tfs += c
+      }
+    }
+    val texts = dl.filter(_ >= 0)
+    new Bm25Index(docs.sparkSession, docId, docIds, dl, all.length.toDouble,
+      if (texts.isEmpty) 0.0 else texts.map(_.toLong).sum.toDouble / texts.length,
+      postings.iterator.map { case (t, (rows, tfs)) => t -> (rows.result(), tfs.result()) }.toMap)
   }
 
-  /** The top `topK` documents of `index` for `queryTerms`: one filtered
-    * projection over the cached rows, then the top k. */
+  /** The top `topK` documents of `index` for `queryTerms`: the query
+    * terms' postings scored term-at-a-time on the driver, then the top
+    * k, numbered from 1 in a leading `rank` column. */
   def query(index: Bm25Index, queryTerms: Seq[String], topK: Int): DataFrame = {
-    // one tf column per DISTINCT term; a term given m times multiplies
-    // its tf by m, as bm25BatchDeltas' join on the raw term list does,
-    // so the batch and streaming forms rank alike
-    val terms = queryTerms.distinct.zipWithIndex.map { case (t, i) =>
-      (t, queryTerms.count(_ == t), s"tf_$i", index.df.getOrElse(t, 0L).toDouble)
+    import index._
+    val score = new Array[Double](dl.length)
+    val matched = new Array[Long](dl.length)
+    val hits = mutable.ArrayBuffer.empty[Int]
+    // one pass per DISTINCT term; a term given m times multiplies its
+    // tf by m, as bm25BatchDeltas' join on the raw term list does, so
+    // the batch and streaming forms rank alike
+    for (t <- queryTerms.distinct; (rows, tfs) <- postings.get(UTF8String.fromString(t))) {
+      val m = queryTerms.count(_ == t)
+      val df = rows.length.toDouble
+      val idf = StrictMath.log((n - df + 0.5) / (df + 0.5) + 1.0)
+      rows.indices.foreach { j =>
+        val i = rows(j)
+        val tf = (tfs(j) * m).toDouble
+        if (matched(i) == 0) hits += i
+        matched(i) += 1
+        // termScore's arithmetic, with its literals
+        score(i) += idf * (tf * 2.2) / (tf + K1 * (0.25 + B * dl(i) / avgdl))
+      }
     }
-    // the statistics enter as query parameters, not literals: a literal
-    // double is compiled into the generated code, so every new query
-    // would compile a new class
-    val param = (v: Double) => QueryParam(index.rows.sparkSession, v)
-    val matched = terms.map { case (_, _, tf, _) => col(tf) > 0 }
-    val score = terms.map { case (_, _, tf, df) =>
-      when(col(tf) > 0, termScore(idf(param(index.n), param(df)), col(tf),
-        col("dl"), param(index.avgdl))).otherwise(0.0)
-    }
-    // foldLeft, not reduce: an empty query filters on lit(false), which
-    // Catalyst prunes to an empty relation with the same four columns
-    ranked(index.rows
-      .select(col("doc_id") +: col("dl") +: terms.map { case (t, m, tf, _) =>
-        (size(filter(col("toks"), _ === t)) * m).as(tf) }: _*)
-      .filter(col("doc_id").isNotNull && matched.foldLeft(lit(false))(_ || _))
-      .select(col("doc_id"),
-        round(score.foldLeft(lit(0.0))(_ + _), 6).as("score"),
-        matched.map(_.cast("long")).foldLeft(lit(0L))(_ + _).as("n_terms_matched")),
-      "score", topK, "rank")
+    hits.foreach(i => score(i) = java.math.BigDecimal.valueOf(score(i))
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue)
+    val byDocId = TypeUtils.getInterpretedOrdering(docId.dataType)
+    val top = hits.toArray.sortWith { (a, b) =>
+      if (score(a) != score(b)) score(a) > score(b)
+      else {
+        val c = byDocId.compare(docIds(a), docIds(b))
+        if (c != 0) c < 0 else a < b
+      }
+    }.take(topK)
+    val schema = StructType(Seq(StructField("rank", LongType, nullable = false), docId,
+      StructField("score", DoubleType), StructField("n_terms_matched", LongType)))
+    new classic.Dataset[Row](spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), top.toSeq.zipWithIndex.map {
+        case (i, r) => InternalRow(r + 1L, docIds(i), score(i), matched(i))
+      }), Encoders.row(schema))
   }
 
   /** Built indexes, one per `documents` path and session, keyed by its
-    * contents; an evicted index's rows are unpersisted. */
-  private[graft] val indexes =
-    new graft.SessionMemo[String, Bm25Index](_.rows.unpersist())
+    * contents. Driver-held, so eviction releases nothing. */
+  private[graft] val indexes = new graft.SessionMemo[String, Bm25Index](_ => ())
 
   /** The memoized index of `dir`'s `documents`. */
   private[graft] def index(spark: SparkSession, dir: String): Bm25Index = {
@@ -200,14 +236,16 @@ object Search {
     * ranking round to 6 decimals BEFORE ranking with doc_id
     * tie-breaks.
     *
-    * Scale shape: the sparse side is a query over the memoized BM25
-    * index of `dir`; the dense side is one tokenize pass into skinny
+    * Scale shape: the sparse side is scored on the driver from the
+    * memoized BM25 index of `dir`, with no Spark job once the index is
+    * built; the dense side is one tokenize pass into skinny
     * per-doc aggregates, and the query's ≤|Q| bucket profile
     * broadcasts into its postings join (never a corpus-side
     * shuffle keyed by the query); each side's candidate cut is
     * orderBy().limit() → TakeOrderedAndProject (distributed partial
-    * top-k); the fusion join touches 2×candK rows. At 100 TB the only
-    * corpus-proportional work is the two skinny per-doc aggregates. */
+    * top-k); the fusion join touches 2×candK rows. At 100 TB the
+    * corpus-proportional parts are the two skinny per-doc aggregates and
+    * the BM25 index, which is driver state. */
   def hybridRrf(spark: SparkSession, dir: String, queryTerms: Seq[String],
                 candK: Int = HybridCandK, topK: Int = 10): DataFrame = {
     val docs = Tables(spark, dir, "documents")

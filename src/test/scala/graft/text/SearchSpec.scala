@@ -29,16 +29,13 @@ class SearchSpec extends AnyFunSuite {
 
   private def assertSameAsLongForm(docs: DataFrame, q: Seq[String],
                                    topK: Int): Array[Row] = {
-    val index = Search.index(docs)
-    try {
-      val fused = Search.query(index, q, topK)
-      val long = longFormBm25(docs, q, topK)
-      assert(fused.schema.map(f => (f.name, f.dataType)) ==
-        long.schema.map(f => (f.name, f.dataType)), s"schema, query $q")
-      val got = fused.collect()
-      assert(got.toSeq == long.collect().toSeq, s"query $q, topK $topK")
-      got
-    } finally index.rows.unpersist()
+    val fused = Search.query(Search.index(docs), q, topK)
+    val long = longFormBm25(docs, q, topK)
+    assert(fused.schema.map(f => (f.name, f.dataType)) ==
+      long.schema.map(f => (f.name, f.dataType)), s"schema, query $q")
+    val got = fused.collect()
+    assert(got.toSeq == long.collect().toSeq, s"query $q, topK $topK")
+    got
   }
 
   /** Hand-made corpus covering the edge cases the bench corpora lack. */
@@ -99,15 +96,50 @@ class SearchSpec extends AnyFunSuite {
     assert(abc(ids.indexOf(1L)).getDouble(2) == abc(ids.indexOf(8L)).getDouble(2))
     assert(abc.forall(r => !r.isNullAt(1)))
 
-    val index = Search.index(edgeDocs)
-    try {
-      val empty = Search.query(index, Seq.empty, 10)
-      assert(empty.columns.toSeq == Seq("rank", "doc_id", "score", "n_terms_matched"))
-      assert(empty.collect().isEmpty)
-    } finally index.rows.unpersist()
+    val empty = Search.query(Search.index(edgeDocs), Seq.empty, 10)
+    assert(empty.columns.toSeq == Seq("rank", "doc_id", "score", "n_terms_matched"))
+    assert(empty.collect().isEmpty)
   }
 
-  test("bm25 runs one Spark job per warm query") {
+  test("driver bm25 equals the long-form plan on 200 seeded sf0.001 queries") {
+    val docs = graft.Tables(spark, SparkTestSession.sfDir, "documents")
+    val vocab = docs.select(explode(split(trim(col("text")), "\\s+")))
+      .distinct().collect().map(_.getString(0)).sorted
+    val index = Search.index(docs)
+    val rnd = new scala.util.Random(20261020L)
+    val queries = Seq.fill(200) {
+      // 1-4 terms: corpus words, now and then an absent word or a repeat
+      val drawn = Seq.fill(1 + rnd.nextInt(4))(
+        if (rnd.nextInt(8) == 0) s"absent${rnd.nextInt(3)}" else vocab(rnd.nextInt(vocab.length)))
+      if (rnd.nextInt(4) == 0) drawn :+ drawn(rnd.nextInt(drawn.length)) else drawn
+    }
+    assert(queries.count(q => q.distinct.size < q.size) >= 20)
+    assert(queries.count(_.exists(_.startsWith("absent"))) >= 20)
+    queries.foreach { q =>
+      // doc_id is unique here, so (score, doc_id) orders totally and the
+      // deepest long-form ranking holds every shallower one
+      val long = longFormBm25(docs, q, 1000).collect().toSeq
+      assert(long.nonEmpty || q.forall(_.startsWith("absent")), s"query $q")
+      Seq(1, 10, 1000).foreach { k =>
+        assert(Search.query(index, q, k).collect().toSeq == long.take(k),
+          s"query $q, topK $k")
+      }
+    }
+  }
+
+  test("two rows sharing a doc_id rank as two documents") {
+    import spark.implicits._
+    val docs = Seq(1L -> "a b", 1L -> "a a", 2L -> "b").toDF("doc_id", "text")
+    // N = 3, avgdl = 5/3, df(a) = 2: the two doc-1 rows post separately
+    val idf = math.log((3 - 2 + 0.5) / (2 + 0.5) + 1.0)
+    def score(tf: Double, dl: Double): Double = BigDecimal(
+      idf * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / (5 / 3.0))))
+      .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
+    assert(Search.query(Search.index(docs), Seq("a"), 10).collect().toSeq ==
+      Seq(Row(1L, 1L, score(2, 2), 1L), Row(2L, 1L, score(1, 2), 1L)))
+  }
+
+  test("bm25 runs no Spark job per warm query") {
     // a private copy of the corpus: no cached plan of another case can
     // stand in for this index's rows
     val dir = java.nio.file.Files.createTempDirectory("graft_bm25_jobs").toString
@@ -116,26 +148,24 @@ class SearchSpec extends AnyFunSuite {
         .write.parquet(s"$dir/documents.parquet")
       def query(): Unit = Search.bm25(spark, dir,
         Seq("spark", "query", "window"), topK = 10).collect()
-      // cold: the documents footer read, the materialization of the
-      // persisted rows, the statistics and the dictionary aggregates
-      // (stage + result each), then the query itself
+      // cold: the documents footer read and the index's one collect
       val cold = jobsOf(query())
-      assert(cold == 7, s"$cold jobs cold")
+      assert(cold == 2, s"$cold jobs cold")
       val warm = jobsOf(query())
-      assert(warm == 1, s"$warm jobs warm")
+      assert(warm == 0, s"$warm jobs warm")
     } finally {
       Search.indexes.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
 
-  test("an in-place corpus rewrite rebuilds the index once and unpersists the old rows") {
+  test("an in-place corpus rewrite rebuilds the index once and persists no rows") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_bm25_memo").toString
     try {
       // the rewrite lands from outside the session (write aside, then
       // swap the directory), so Spark refreshes no cache of the path
-      // itself: the memo alone must notice and drop the old rows
+      // itself: the memo alone must notice and rebuild
       def write(docs: Seq[(Long, String)]): Unit = {
         val staged = s"$dir/staged-${System.nanoTime}"
         docs.toDF("doc_id", "text").coalesce(1).write.parquet(staged)
@@ -149,17 +179,16 @@ class SearchSpec extends AnyFunSuite {
       val sc = spark.sparkContext
       write(Seq(1L -> "a b", 2L -> "a a", 3L -> "b c"))
       val before = sc.getPersistentRDDs.keySet
+      def persisted = sc.getPersistentRDDs.keySet -- before
       assert(top() == Seq(2L, 1L))
-      val firstRows = sc.getPersistentRDDs.keySet -- before
-      assert(firstRows.nonEmpty)
+      assert(persisted.isEmpty, "the build left a persisted RDD")
       val builds = Search.indexes.builds.get
       assert(top() == Seq(2L, 1L))
       assert(Search.indexes.builds.get == builds, "a warm query rebuilt the index")
       write(Seq(4L -> "c a", 5L -> "a a a b", 6L -> "b"))
       assert(top() == Seq(5L, 4L))
       assert(Search.indexes.builds.get == builds + 1)
-      assert((firstRows & sc.getPersistentRDDs.keySet).isEmpty,
-        "the replaced index's rows are still persisted")
+      assert(persisted.isEmpty, "the rebuild left a persisted RDD")
       assert(top() == Seq(5L, 4L))
       assert(Search.indexes.builds.get == builds + 1)
     } finally {

@@ -46,7 +46,12 @@ case "$mode" in
   *) echo "usage: $0 {pair|sf10} <sf_dir> <out.json>" >&2; exit 2 ;;
 esac
 cd "$(dirname "$0")/.."
-SPARK_GRAFT_GC="$gc" SPARK_DRIVER_MEM=48g SPARK_GRAFT_CPUS=32 \
+# cores and heap follow the host, by the tier-1 command's expressions
+# (every core; half the memory, within 2-8 GB); a value set in the
+# environment wins, e.g. SPARK_DRIVER_MEM=48g for an sf10 soak
+cpus=${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}
+mem=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}
+SPARK_GRAFT_GC="$gc" SPARK_DRIVER_MEM="$mem" SPARK_GRAFT_CPUS="$cpus" \
 SPARK_GRAFT_SF_DIR="$sf" SPARK_GRAFT_BENCH_PASSES=$passes \
 SPARK_GRAFT_BENCH_WARMUP=$warmup SPARK_GRAFT_BENCH_OUT="$out" \
 sbt -batch "runMain graft.Bench"
