@@ -1,7 +1,9 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** S8 + K1 — the reference's media mirroring: download each post's media
   * bytes and put them into the owned store, SKIPPING keys that already
@@ -33,23 +35,7 @@ object MediaFetch {
                    fetch: String => Array[Byte]): DataFrame = {
     val spark = candidates.sparkSession
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    // resolve through the Hadoop FS layer, NOT java.io.File: the store may
-    // be any Hadoop-supported URI (s3a://, hdfs://, file:); a local-file
-    // round trip would silently rebase remote URIs onto the local disk
-    val fs = new org.apache.hadoop.fs.Path(storeDir).getFileSystem(hconf)
-    val storePath =
-      fs.makeQualified(new org.apache.hadoop.fs.Path(storeDir))
-    // first-run probe by LISTING, not by catching a read failure: a
-    // missing dir and an existing-but-empty dir are both "first run"
-    // (the AnalysisException catch treated them differently), and
-    // leftover non-parquet temp files don't count as data
-    val hasData = fs.exists(storePath) &&
-      fs.listStatus(storePath).exists(f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val inventory: DataFrame =
-      if (hasData) spark.read.parquet(storeDir).select("key")
-      else spark.emptyDataset[String].toDF("key")
+    val (fs, storePath, inventory) = store(spark, storeDir, "key STRING")
     val missing = candidates.select("key", "url")
       // one fetch per key even if a batch repeats a key; min(url) makes
       // the surviving row DETERMINISTIC (dropDuplicates would keep an
@@ -101,16 +87,8 @@ object MediaFetch {
                           headerBytes: Long = 1L << 16): DataFrame = {
     val spark = candidates.sparkSession
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(storeDir).getFileSystem(hconf)
-    val storePath =
-      fs.makeQualified(new org.apache.hadoop.fs.Path(storeDir))
-    val hasData = fs.exists(storePath) &&
-      fs.listStatus(storePath).exists(f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val inventory: DataFrame =
-      if (hasData) spark.read.parquet(storeDir).select("key", "sample_number")
-      else spark.emptyDataset[(String, Long)].toDF("key", "sample_number")
+    val (fs, storePath, inventory) =
+      store(spark, storeDir, "key STRING, sample_number BIGINT")
     val planned = candidates.select("key", "url")
       .groupBy("key").agg(min("url").as("url")) // deterministic, like fetchMissing
       .as[(String, String)]
@@ -150,22 +128,35 @@ object MediaFetch {
     fetched
   }
 
+  /** The store at `storeDir` (any Hadoop URI, never rebased through
+    * java.io.File): its filesystem, qualified path and inventory columns
+    * `cols`, read with that part of the schema `stagedAppend` writes (no
+    * footer-inference job); empty while the dir holds no parquet file. */
+  private def store(spark: SparkSession, storeDir: String, cols: String)
+      : (FileSystem, Path, DataFrame) = {
+    val fs = new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val storePath = fs.makeQualified(new Path(storeDir))
+    val hasData = fs.exists(storePath) && fs.listStatus(storePath).exists(f =>
+      f.isFile && f.getPath.getName.endsWith(".parquet"))
+    (fs, storePath,
+      if (hasData) spark.read.schema(cols).parquet(storeDir)
+      else spark.createDataFrame(new java.util.ArrayList[Row](), StructType.fromDDL(cols)))
+  }
+
   /** Atomic-ish append shared by both fetch operators: write to a
     * dot-prefixed staging dir (invisible to parquet listings), then
     * move completed part files into the store one rename at a time. A
     * crash mid-write leaves only the staging dir; a crash mid-move
     * leaves some COMPLETE files — the idempotent anti join refetches
     * the remainder. */
-  private def stagedAppend(fetched: DataFrame,
-                           fs: org.apache.hadoop.fs.FileSystem,
-                           storePath: org.apache.hadoop.fs.Path): Unit = {
-    val staging = new org.apache.hadoop.fs.Path(
-      storePath, s".staging-${java.util.UUID.randomUUID}")
+  private def stagedAppend(fetched: DataFrame, fs: FileSystem,
+                           storePath: Path): Unit = {
+    val staging = new Path(storePath, s".staging-${java.util.UUID.randomUUID}")
     fetched.write.mode(SaveMode.Overwrite).parquet(staging.toString)
     fs.listStatus(staging)
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .foreach { f =>
-        val dest = new org.apache.hadoop.fs.Path(storePath, f.getPath.getName)
+        val dest = new Path(storePath, f.getPath.getName)
         // a silently-false rename would DROP a completed batch part —
         // fail loudly
         if (!fs.rename(f.getPath, dest))

@@ -134,32 +134,30 @@ object PostIngest {
 
   /** Streaming form of the ingest — SURVEY §3.1's engine equivalent of
     * the per-PUT Lambda: `readStream.json(lake)` → the same flatten chain
-    * → a keyed merge per micro-batch (`StreamFold.run`; versioned parquet
-    * snapshot, latest-wins). `Trigger.AvailableNow` replay of the static
-    * lake equals `snapshot`; `maxFilesPerTrigger` bounds each micro-batch
-    * so the merge is exercised across batches. */
+    * → a `StreamFold.fold` in which each micro-batch appends only its own
+    * `latestPerPost` winners (O(batch) rows, one write job in one
+    * partition, so no exchange), compacted with the same composable fold
+    * every 16 batches; the result equals `snapshot` for any
+    * `maxFilesPerTrigger`. With `workDir` a rerun resumes by `StreamFold`'s
+    * restart contract; without it, each call folds into a fresh temp dir. */
   def streamSnapshot(spark: SparkSession, globPath: String,
-                     maxFilesPerTrigger: Int = 3): DataFrame = {
-    import graft.streaming.StreamFold
-    val work = StreamFold.work(None, "graft_posts")
-    @volatile var latest: Option[String] = None
-    StreamFold.run(withEnvelope(spark.readStream.schema(postSchema)
-        .options(permissive)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-        .json(globPath)), work) { (batch, batchId) =>
-      val incoming = flatten(batch)
-      val merged = latest match {
-        case Some(prev) => batch.sparkSession.read.parquet(prev).unionByName(incoming)
-        case None       => incoming
-      }
-      val next = s"$work/state_v$batchId"
-      latestPerPost(merged).write.mode("overwrite").parquet(next)
-      latest = Some(next)
+                     maxFilesPerTrigger: Int = 3): DataFrame =
+    streamSnapshot(spark, globPath, maxFilesPerTrigger, None)
+
+  def streamSnapshot(spark: SparkSession, globPath: String,
+                     maxFilesPerTrigger: Int, workDir: Option[String]): DataFrame = {
+    import graft.streaming.{AppendOnlyState, StreamFold}
+    val source = withEnvelope(spark.readStream.schema(postSchema)
+      .options(permissive + ("maxFilesPerTrigger" -> maxFilesPerTrigger.toString))
+      .json(globPath))
+    def latestInOnePartition(df: DataFrame) = latestPerPost(df.coalesce(1))
+    val state = new AppendOnlyState(StreamFold.work(workDir, "graft_posts"),
+      Seq(("latest", flatten(source).schema)), compactEvery = 16,
+      folds = Map("latest" -> (latestInOnePartition _)))
+    StreamFold.fold(source, state) { (batch, _) =>
+      StreamFold.Delta("latest" -> latestInOnePartition(flatten(batch)))
     }
-    latest match {
-      case Some(path) => spark.read.parquet(path)
-      case None       => spark.emptyDataFrame
-    }
+    latestPerPost(state.read(spark, "latest"))
   }
 
   /** Ingest observability: valid vs corrupt record counts for a lake path

@@ -4,9 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Append-only parquet state shared by the incremental dedup streams
-  * (Replay.streamNearDup, SemDedupStream.streamKeepList): a set of named
-  * tables under generation directories `work/g<N>/<table>/b<batchId>`.
+/** Append-only parquet state shared by the `StreamFold.fold` streams: a
+  * set of named tables under generation directories `work/g<N>/<table>/b<batchId>`.
   *
   * Contract (the subtle parts, kept in ONE place):
   *   - per-batch appends are O(batch) files; nothing rewrites the full
@@ -61,7 +60,7 @@ import org.apache.spark.sql.types.StructType
   * filesystem. The specs exercise both plain paths and explicit
   * `file://` URIs through the same instance.
   */
-private[streaming] final class AppendOnlyState(val work: String,
+private[graft] final class AppendOnlyState(val work: String,
     tables: Seq[(String, StructType)], compactEvery: Int,
     folds: Map[String, DataFrame => DataFrame] = Map.empty) {
   private val schemas = tables.toMap

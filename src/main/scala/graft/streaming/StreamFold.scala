@@ -68,7 +68,11 @@ private[graft] object StreamFold {
     }
 
   /** The raw loop: drains `source`'s backlog, running `body` on each
-    * micro-batch, then returns. Stateless writers call it directly. */
+    * micro-batch, then returns. Stateless writers call it directly.
+    * `body` runs under `batch.sparkSession`, Spark's per-stream clone of
+    * the caller's session; a stateless stream keeps the caller's AQE
+    * there (Spark turns it off only for stateful ones, as in `collect`),
+    * and the caller's session is never changed. */
   def run(source: DataFrame, work: String)(body: (DataFrame, Long) => Unit): Unit =
     source.writeStream
       .trigger(Trigger.AvailableNow())
@@ -79,6 +83,13 @@ private[graft] object StreamFold {
       }
       .start()
       .awaitTermination()
+
+  // Spark warns at every stream start from an AQE-on session that AQE will
+  // be disabled, untrue of stateless streams (see `run`); starting from an
+  // AQE-off session would hide the stream from the caller's `spark.streams`.
+  org.apache.logging.log4j.core.config.Configurator.setLevel(
+    "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+    org.apache.logging.log4j.Level.ERROR)
 
   /** A stream with no per-batch fold (a `flatMapGroupsWithState`, a
     * complete-mode windowed aggregate) drained into a memory sink under a
@@ -125,7 +136,7 @@ private[graft] object StreamFold {
     * `state`, committed in one `endBatchWork`. A replayed batch that
     * compaction already folded in is skipped before `delta` runs — its
     * rows can no longer be excluded from the state reads. */
-  private[streaming] def fold(source: DataFrame, state: AppendOnlyState)(
+  def fold(source: DataFrame, state: AppendOnlyState)(
       delta: (DataFrame, Long) => Delta): Unit =
     run(source, state.work) { (batch, batchId) =>
       if (!state.alreadyFolded(batchId)) {

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (suites are in one
@@ -39,25 +41,38 @@ object SparkTestSession {
     while (runningTasks(group) < tasks && System.nanoTime < end) Thread.sleep(20)
   }
 
-  /** Spark jobs `body` runs, counted through a job group; the listener
-    * bus is drained before and after, so no other case's jobs leak in
-    * and none of `body`'s arrive late. */
+  /** Spark jobs `body` runs, counted through a job group — its own, and
+    * the run id each stream it starts puts its micro-batches under; the
+    * listener bus is drained before and after, so no other case's jobs
+    * leak in and none of `body`'s arrive late. */
   def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
     org.apache.spark.GraftTestBridge.drainListenerBus(sc)
     val group = s"graft-test-jobs-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val groups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]
+    groups.add(group)
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(jobGroups.add)
+    }
+    val streams = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = groups.add(e.runId.toString)
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
     sc.addSparkListener(l)
+    spark.streams.addListener(streams)
     try {
       sc.setJobGroup(group, "job count")
       try body finally sc.clearJobGroup()
       org.apache.spark.GraftTestBridge.drainListenerBus(sc)
-    } finally sc.removeSparkListener(l)
-    jobs.get
+    } finally {
+      sc.removeSparkListener(l)
+      spark.streams.removeListener(streams)
+    }
+    jobGroups.asScala.count(groups.contains)
   }
 }

@@ -40,4 +40,33 @@ class StreamFoldSpec extends AnyFunSuite {
       graft.operators.Events.q18HourlyRollup(spark, dir).collect().toSeq)
     assert(sinkTables() == before)
   }
+
+  test("a batch body runs on the stream's clone of the caller's session, AQE on, and no AQE WARN is logged") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val spark = graft.SparkTestSession.spark
+    val dir = Files.createTempDirectory("graft_fold_session").toString
+    Replay.cleanupAtExit(dir)
+    spark.range(3).write.mode("overwrite").parquet(s"$dir/in")
+    val warned = new java.util.concurrent.atomic.AtomicInteger
+    val appender = new AbstractAppender("graft-aqe-warn", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.endsWith("ResolveWriteToStream")) warned.incrementAndGet()
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    val callerAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val seen = new java.util.concurrent.atomic.AtomicReference[(Boolean, String)]
+    root.addAppender(appender)
+    try StreamFold.run(StreamFold.parquet(spark, spark.range(1).schema, s"$dir/in", 1),
+        s"$dir/work") { (batch, _) =>
+      seen.set((batch.sparkSession eq spark, batch.sparkSession.conf.get("spark.sql.adaptive.enabled")))
+    } finally root.removeAppender(appender)
+    assert(callerAqe == "true")
+    assert(seen.get == ((false, "true")))
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == callerAqe)
+    assert(warned.get == 0)
+  }
 }

@@ -16,8 +16,10 @@ Prints every run's result line as it lands, with the stolen cores
 tree), then per metric: the median and quartiles of each side, the
 relative delta of the medians, the parent's interquartile distance
 relative to its median, the pairs the change won (ties count for
-neither side) and a verdict; then each side's correct runs,
-failed/attempted operations and flagged runs.
+neither side) and a verdict; then, for untraced runs, each side's median
+micro-batch duration over the `detail.batch_ms` of its records (the
+per-batch time behind a `work_per_s` move); then each side's correct
+runs, failed/attempted operations and flagged runs.
 
 The verdict has two parts. "claim met" means the change's median is
 better, the change won at least nine tenths of the pairs, and the
@@ -83,20 +85,23 @@ def run(tree, workload, seed, seconds, trace):
     except (IndexError, ValueError):
         return None
     if got is not None:
-        got["host"] = host_of(tree, workload, seed, trace)
+        got["host"], got["batch_ms"] = record_of(tree, workload, seed, trace)
     return got
 
 
-def host_of(tree, workload, seed, trace):
-    """Stolen cores and the flagged mark from the run's record."""
+def record_of(tree, workload, seed, trace):
+    """Stolen cores and the flagged mark, and the micro-batch durations,
+    from the run's record."""
     record = os.path.join(tree, "perfbench", "work", "results",
                           f"{workload}-s{seed}-t{trace}.json")
     try:
         with open(record) as f:
-            host = json.load(f)["host"]
-        return {"steal_cores": host.get("steal_cores"), "flagged": bool(host.get("flagged"))}
+            rec = json.load(f)
+        host = rec["host"]
+        return ({"steal_cores": host.get("steal_cores"), "flagged": bool(host.get("flagged"))},
+                rec.get("detail", {}).get("batch_ms", []))
     except (OSError, ValueError, KeyError):
-        return {"steal_cores": None, "flagged": None}
+        return {"steal_cores": None, "flagged": None}, []
 
 
 def main():
@@ -127,8 +132,9 @@ def main():
                 got = run(trees[side], a.workload, seed, spec["run_seconds"], a.trace)
                 results[side].append(got)
                 host = got["host"] if got else {}
+                shown = {k: v for k, v in got.items() if k != "batch_ms"} if got else None
                 print(f"[ab] seed {seed} {side}: steal_cores {host.get('steal_cores')} "
-                      f"flagged {host.get('flagged')}: {json.dumps(got)}", flush=True)
+                      f"flagged {host.get('flagged')}: {json.dumps(shown)}", flush=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -150,6 +156,12 @@ def main():
               f"{f'{cm:.4g} [{c1:.4g}, {c3:.4g}]':>30} {rel(cm - pm):>8} "
               f"{rel(p3 - p1).lstrip('+'):>7} {f'{wins}/{len(pairs)}':>7}  "
               f"{verdict(m, pm, cm, p1, p3, wins, len(pairs))}")
+    if a.trace == "0":
+        for i, side in enumerate(("parent", "change")):
+            batches = [b for pair in pairs for b in pair[i]["batch_ms"]]
+            if batches:
+                print(f"{side}: micro-batch median {statistics.median(batches):.4g} ms "
+                      f"over {len(batches)} batches (detail.batch_ms)")
     for side in ("parent", "change"):
         rs = results[side]
         ok = [r for r in rs if r]
